@@ -122,24 +122,57 @@ def test_txt_jsonl_sinks_roundtrip(spark, tmp_path):
     assert recs == ["https://a.test/1", "https://a.test/2"]
 
 
-def test_iceberg_store_fast_fails_without_catalog(spark):
-    """IcebergStore is the cluster path (no Iceberg jars in sandbox) — it
-    must fail fast and actionably when the catalog isn't configured."""
-    from xcrawl3r_spark.sinks.tables import IcebergStore
+def test_config_scaffold_with_retired_keys_loads(tmp_path):
+    """A scaffold written before iceberg_catalog/iceberg_namespace/
+    shuffle_partitions were removed carries them at the SAME version, so
+    create_or_update leaves it untouched; from_yaml must still load it.
+    A misspelt key next to them must still raise."""
+    from dataclasses import asdict
 
-    try:
-        IcebergStore(spark, "ice")
-        raise AssertionError("must raise without spark.sql.catalog.ice")
-    except RuntimeError as e:
-        assert "spark.sql.catalog.ice" in str(e)
+    import yaml
 
-    cfg = CrawlConfig(iceberg_catalog="ice")
-    from xcrawl3r_spark.plans.crawl import Crawler
+    from xcrawl3r_spark.config import CONFIG_VERSION
+
+    old = {**asdict(CrawlConfig()), "iceberg_catalog": None,
+           "iceberg_namespace": "crawl", "shuffle_partitions": None}
+    text = (yaml.safe_dump({"version": CONFIG_VERSION}, sort_keys=False)
+            + yaml.safe_dump(old, sort_keys=True))
+    path = tmp_path / "config.yaml"
+    path.write_text(text)
+    CrawlConfig.create_or_update(str(path))
+    assert path.read_text() == text          # same version: untouched
+    assert CrawlConfig.from_yaml(str(path)) == CrawlConfig()
+
+    path.write_text(text + "dephts: 3\n")
     try:
-        Crawler(spark, cfg)
-        raise AssertionError("Crawler must surface the missing catalog")
-    except RuntimeError:
-        pass
+        CrawlConfig.from_yaml(str(path))
+        raise AssertionError("typo key must raise")
+    except ValueError as e:
+        assert "dephts" in str(e) and "iceberg" not in str(e)
+
+
+def test_every_config_field_is_read():
+    """A CrawlConfig field no code reads is a dead knob: each one must
+    appear as ``cfg.<name>`` somewhere in the package (or ``self.<name>``
+    inside config.py). ``delay`` and ``debug`` are the reference-parity
+    flags the CLI accepts and the batch data plane deliberately ignores."""
+    import pathlib
+    import re
+    from dataclasses import fields
+
+    import xcrawl3r_spark
+
+    root = pathlib.Path(xcrawl3r_spark.__file__).parent
+    srcs = [(p == root / "config.py", p.read_text())
+            for p in root.rglob("*.py")]
+    dead = [
+        f.name for f in fields(CrawlConfig)
+        if f.name not in ("delay", "debug")
+        and not any(re.search(rf"\bcfg\.{f.name}\b", s)
+                    or (is_cfg and re.search(rf"\bself\.{f.name}\b", s))
+                    for is_cfg, s in srcs)
+    ]
+    assert dead == []
 
 
 def test_seeds_from_stdin_piped(spark, monkeypatch):

@@ -49,6 +49,12 @@ def test_kill_resume_bit_identity(spark, tmp_path):
     resumed = c2.resume(seeds, pages)
     assert _edges_ms(resumed.edges) == full_edges
     assert _seen_set(resumed.seen) == full_seen
+    # the tail's per-iteration metrics survive the stitch: one entry per
+    # iteration run after the resume
+    assert resumed.iterations == full.iterations > 2
+    assert len(resumed.metrics) == full.iterations - 2
+    assert [m["iter"] for m in resumed.metrics] == list(
+        range(3, full.iterations + 1))
 
     # resuming a FINISHED run is a no-op (nothing double-committed)
     c3 = Crawler(spark, _cfg(ckpt))
@@ -90,6 +96,7 @@ def test_resume_restores_mined_robots_rules(spark, tmp_path):
     c1 = Crawler(spark, cfg(ckpt))
     c1.crawl(seeds, pages_df, max_iterations=2)
     resumed = Crawler(spark, cfg(ckpt)).resume(seeds, pages_df)
+    assert resumed.seen_filter is not None   # Bloom on: the tail's filter
     res_seen = _seen_set(resumed.seen)
     assert all(("private" not in u) for _, u, _d in res_seen)
     assert res_seen == full_seen

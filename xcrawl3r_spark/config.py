@@ -15,6 +15,12 @@ from dataclasses import dataclass, field
 #: merge-on-version-change compares the YAML's ``version:`` key against
 CONFIG_VERSION = "1.2.0"
 
+#: fields removed from CrawlConfig that ``create_or_update`` wrote into
+#: every scaffold before their removal; ``from_yaml`` drops them so those
+#: files keep loading (any other unknown key still errors)
+RETIRED_KEYS = frozenset({"iceberg_catalog", "iceberg_namespace",
+                          "shuffle_partitions"})
+
 
 @dataclass
 class CrawlConfig:
@@ -109,14 +115,6 @@ class CrawlConfig:
     #: checkpoint directory for frontier/seen snapshots; None = no
     #: checkpointing (resume disabled)
     checkpoint_dir: str | None = None
-    #: Iceberg catalog name for crawl-state tables (north-rule layout);
-    #: when set, snapshots commit through IcebergStore instead of the
-    #: parquet SnapshotStore. Requires spark.sql.catalog.<name> on the
-    #: session (no Iceberg jars in this sandbox — cluster-only path)
-    iceberg_catalog: str | None = None
-    iceberg_namespace: str = "crawl"
-    #: shuffle partitions for crawl-stage repartitions; None = session conf
-    shuffle_partitions: int | None = None
     #: persist the collapsed seen set as a hash-bucketed catalog table
     #: (N buckets on dedup_key, 0 = off). Every anti-join against seen
     #: then reads the bucketed layout with NO exchange on the seen side —
@@ -212,6 +210,8 @@ class CrawlConfig:
             # ``version`` is file metadata (the create/merge trigger),
             # not a config field — same as the reference struct's Version
             loaded.pop("version", None)
+            for k in RETIRED_KEYS:
+                loaded.pop(k, None)
             unknown = set(loaded) - set(known)
             if unknown:
                 raise ValueError(f"unknown config keys: {sorted(unknown)}")

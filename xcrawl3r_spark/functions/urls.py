@@ -111,13 +111,6 @@ def canonicalize(url: str) -> str | None:
     return urlunsplit((scheme, netloc, parts.path, parts.query, parts.fragment))
 
 
-def url_host(url: str) -> str:
-    try:
-        return urlsplit(url).netloc.lower()
-    except ValueError:
-        return ""
-
-
 def url_path_ext(url: str) -> str:
     """Final extension of the URL path, like Go's path.Ext (with dot)."""
     try:
@@ -206,12 +199,6 @@ def expand_seed_targets(url: str) -> list[str]:
 # ---------------------------------------------------------------------------
 # Spark column builders (native Catalyst expressions — JVM-side, codegen'd)
 # ---------------------------------------------------------------------------
-
-def url_hash_col(url: Column) -> Column:
-    """64-bit URL hash — the seen-set key. Native xxhash64 (JVM-side),
-    analogous to colly's FNV-64 of the request URL."""
-    return F.xxhash64(url)
-
 
 def path_ext_col(url: Column) -> Column:
     """path.Ext equivalent: final '.ext' of parse_url(url,'PATH'), '' if none."""

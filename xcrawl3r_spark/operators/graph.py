@@ -34,7 +34,7 @@ SCALE = 1_000_000  # micro-rank fixed point: 10^6 == rank 1.0
 def pagerank(
     edges: DataFrame, iters: int = 3, damping_pct: int = 85,
     src: str = "src", dst: str = "dst", checkpoint_every: int = 0,
-    dangling: str = "drop", materialize_invariants: bool = False,
+    dangling: str = "drop",
 ) -> DataFrame:
     """(src, dst) edge list -> (id, rank) in micro-rank units.
 
@@ -61,12 +61,6 @@ def pagerank(
       stay under 2^63; dangling_sum is bounded by total system mass
       ~ n_nodes * SCALE, so the safe limit is n_nodes < ~10^11.
 
-    ``materialize_invariants``: write the loop-invariant node set and
-    weighted-edge frames to disk once instead of recomputing them per
-    round — OFF by default (see the in-body comment: at bench scale the
-    write costs more than the recomputes; turn on for long runs / big
-    graphs on real clusters).
-
     ``checkpoint_every``: DISK_ONLY-checkpoint the rank table every k
     rounds to cut plan depth on long runs (0 = off; the unrolled plan is
     fine for small ``iters`` in drop mode). ``redistribute`` references
@@ -90,23 +84,6 @@ def pagerank(
     # source's out-degree; keep their equi-join hoisted as ONE frame so
     # the loop body stays a single join per round (guide §2.4)
     e_w = e.join(outdeg, "src")
-    if materialize_invariants:
-        # LOOP-INVARIANTS (node set: stepped join + rank_0 + dangling
-        # ids; weighted edges: the per-round contribution join): write
-        # each once and let every round read the blocks instead of
-        # re-running union+distinct / the outdeg join per round.
-        # DISK_ONLY (the deserialized default anti-scales with cores,
-        # plans/crawl._ckpt). OFF by default: measured at bench scale
-        # (sf0.1 graph, 3 rounds) the eager materialization's write +
-        # build-time jobs cost MORE than the three recomputes it saves
-        # (r6 ABBA: pagerank cold 1.28x, host_rank 1.36x with it on).
-        # Turn it ON for long runs / big graphs on a real cluster,
-        # where iters x full-edge-scan recompute dwarfs one disk
-        # round-trip of (edges ⋈ outdeg).
-        nodes = nodes.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        e_w = e_w.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY)
     base = (100 - damping_pct) * SCALE // 100
     rank = nodes.withColumn("rank", F.lit(SCALE).cast("long"))
     if dangling == "redistribute":

@@ -24,12 +24,6 @@ What is a clearly-marked STUB (the sandbox has no libjpeg/ffmpeg/librosa):
   plus the deterministic "XPCM" container produced by ``synth_audio``,
   and raises NotImplementedError on anything else (swap in
   soundfile/librosa on a real deployment);
-- pixel-level video decode (``sample_frames``) — accepts the
-  deterministic "XVID" container of concatenated XJPG frames produced by
-  ``synth_video`` and raises NotImplementedError otherwise (swap in
-  PyAV/ffmpeg). Frame *indexing* over real GIF containers needs no such
-  stub (``gif_frame_index``). The *plumbing* — batch shape, frame-stride
-  logic, output schema — is real and tested.
 
 At 100 TB: these stages are embarrassingly parallel maps; partition sizing
 is governed by payload bytes, not row counts, so callers should
@@ -49,11 +43,7 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
-from xcrawl3r_spark.functions.imagecodec import (
-    decode_image,
-    encode_image,
-    phash64,
-)
+from xcrawl3r_spark.functions.imagecodec import decode_image, encode_image
 
 _XPCM_SIG = b"XPCM"
 _XVID_SIG = b"XVID"
@@ -185,7 +175,8 @@ def synth_wav(i: int) -> bytes:
 
 
 def synth_video(video_id: str, n_frames: int = 8, w: int = 16, h: int = 16) -> bytes:
-    """Deterministic 'video': n_frames XJPG frames, length-prefixed."""
+    """Deterministic non-GIF 'video' (n_frames XJPG frames, length-
+    prefixed): the reject fixture ``gif_frame_index`` must skip."""
     from xcrawl3r_spark.functions.imagecodec import synth_pixels
 
     frames = []
@@ -324,18 +315,6 @@ def _iter_gif_frames(data: bytes) -> Iterator[dict]:
     raise ValueError("missing trailer")
 
 
-def _iter_video_frames(data: bytes) -> Iterator[bytes]:
-    if not data.startswith(_XVID_SIG):
-        raise NotImplementedError(
-            "video codec not available in sandbox (only XVID fixture)")
-    (n,) = struct.unpack("<I", data[4:8])
-    pos = 8
-    for _ in range(n):
-        (ln,) = struct.unpack("<I", data[pos:pos + 4])
-        yield data[pos + 4:pos + 4 + ln]
-        pos += 4 + ln
-
-
 # ---------------------------------------------------------------------------
 # numpy kernels (real)
 # ---------------------------------------------------------------------------
@@ -370,11 +349,6 @@ RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
 AUDIO_FEATURES_SCHEMA = (
     "audio_id string, n_samples int, rate int, sum_sq long, rms double, "
     "zero_crossings int, part_id int"
-)
-
-FRAME_SAMPLE_SCHEMA = (
-    "video_id string, frame_idx int, bytes binary, w int, h int, "
-    "phash long, part_id int"
 )
 
 GIF_FRAME_INDEX_SCHEMA = (
@@ -525,30 +499,3 @@ def gif_frame_index(videos: DataFrame, stride: int = 1) -> DataFrame:
 
     return _shipped(videos).select("video_id", "bytes").mapInPandas(
         gen, GIF_FRAME_INDEX_SCHEMA)
-
-
-def sample_frames(videos: DataFrame, stride: int = 2) -> DataFrame:
-    """(video_id, bytes) -> every ``stride``-th frame as its own payload
-    row. Container parse is the sandbox STUB (XVID only); the stride
-    logic, per-frame decode and fan-out plumbing are real."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    frames = list(_iter_video_frames(r.bytes))
-                except NotImplementedError:
-                    continue
-                for idx in range(0, len(frames), stride):
-                    px = decode_image(frames[idx], "jpeg")
-                    rows.append((r.video_id, idx, frames[idx],
-                                 px.shape[1], px.shape[0], phash64(px), pid))
-            yield pd.DataFrame(rows, columns=[
-                "video_id", "frame_idx", "bytes", "w", "h", "phash",
-                "part_id"])
-
-    return _shipped(videos).select("video_id", "bytes").mapInPandas(
-        gen, FRAME_SAMPLE_SCHEMA)

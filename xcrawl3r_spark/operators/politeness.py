@@ -23,24 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def priority_cols(df: DataFrame) -> DataFrame:
-    """A5: deterministic priority struct (depth, host_rank, url_hash).
-
-    host_rank is a stable pseudo-rank of the host (hash-derived, not
-    wall-clock) so ordering is reproducible across runs/resumes — the
-    reference's async ordering is nondeterministic, so parity is defined
-    on sets with THIS documented tie-break (SURVEY §2.6 A5).
-    """
-    return df.withColumn(
-        "priority",
-        F.struct(
-            F.col("depth").alias("depth"),
-            F.pmod(F.xxhash64("host"), F.lit(1000)).cast("int").alias("host_rank"),
-            F.col("url_hash").alias("tie"),
-        ),
-    )
-
-
 def politeness_flag(
     frontier: DataFrame, budget: int, skew_salt: int = 0,
     eligible: F.Column | None = None,

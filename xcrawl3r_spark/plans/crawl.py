@@ -50,11 +50,7 @@ from xcrawl3r_spark.operators.politeness import (
     politeness_flag,
     robots_flag,
 )
-from xcrawl3r_spark.sinks.tables import (
-    IcebergStore,
-    SnapshotStore,
-    write_bucketed,
-)
+from xcrawl3r_spark.sinks.tables import SnapshotStore, write_bucketed
 
 FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
                  "disc_iter", "src_url"]
@@ -108,13 +104,8 @@ class Crawler:
         #: invalidates the previous CrawlResult.seen when
         #: cfg.bucketed_seen is on — collect what you need first.
         self._prev_bucket_tables: list[str] = []
-        if self.cfg.iceberg_catalog:
-            self.store = IcebergStore(
-                spark, self.cfg.iceberg_catalog, self.cfg.iceberg_namespace)
-        elif self.cfg.checkpoint_dir:
-            self.store = SnapshotStore(spark, self.cfg.checkpoint_dir)
-        else:
-            self.store = None
+        self.store = (SnapshotStore(spark, self.cfg.checkpoint_dir)
+                      if self.cfg.checkpoint_dir else None)
 
     # -- column helpers -------------------------------------------------
     def _dedup_key(self) -> F.Column:
@@ -722,8 +713,7 @@ class Crawler:
         Re-runs nothing that committed; the deterministic data plane makes
         the combined output bit-identical to an uninterrupted run."""
         if self.store is None:
-            raise ValueError(
-                "resume() requires cfg.checkpoint_dir or cfg.iceberg_catalog")
+            raise ValueError("resume() requires cfg.checkpoint_dir")
         last = self.store.last_iteration("frontier")
         if last is None:
             return self.crawl(seeds, pages, robots, image_payloads,
@@ -759,4 +749,6 @@ class Crawler:
             images=images if images is not None else res.images,
             errors=errors if errors is not None else res.errors,
             iterations=res.iterations + last,
+            metrics=res.metrics,
+            seen_filter=res.seen_filter,
         )

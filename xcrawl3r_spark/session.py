@@ -99,10 +99,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let the planner pick shuffled-hash joins where the per-partition
         # build side fits (guide §3.1/§9): sort-merge pays two sorts the
-        # hash join skips; AQE's skew handling still applies. Overridable
-        # for A/Bs via XCRAWL3R_PREFER_SMJ=true (the pre-r6 behavior).
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("XCRAWL3R_PREFER_SMJ", "false"))
+        # hash join skips; AQE's skew handling still applies. For A/Bs
+        # against sort-merge, pass extra_conf=
+        # {"spark.sql.join.preferSortMergeJoin": "true"} (applied after).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -1,10 +1,8 @@
 """Snapshot table store — Iceberg-style atomic commits + time travel on
 plain Parquet, used for checkpointed frontier/seen/edges state.
 
-On a real cluster these tables are Iceberg (`df.writeTo(...).append()` with
-snapshot ids per crawl iteration — the north rule's layout); the sandbox
-has no Iceberg runtime jars, so this module provides the same contract on
-a directory of parquet commits with a JSON manifest:
+Each crawl iteration is one commit on a directory of parquet files with a
+JSON manifest:
 
     <base>/<table>/data/iter=<k>/ part-*.parquet      (one commit per iter)
     <base>/<table>/_manifest.json                      (atomic rename)
@@ -15,10 +13,6 @@ invisible -> iteration re-runs deterministically) or the new one (commit
 visible -> iteration skipped on resume). Combined with a fully
 deterministic data plane (no wall clock, no RNG — SURVEY §4.2) resume is
 bit-identical.
-
-If an Iceberg catalog IS configured on the session
-(spark.sql.catalog.<name> set), `IcebergStore` delegates to real Iceberg
-tables with the same interface.
 """
 
 from __future__ import annotations
@@ -85,87 +79,6 @@ class SnapshotStore:
         if not commits:
             return None
         return self.spark.read.parquet(commits[0]["path"])
-
-
-class IcebergStore:
-    """The SnapshotStore contract on real Iceberg tables.
-
-    Requires an Iceberg catalog configured on the session
-    (``spark.sql.catalog.<catalog>`` = org.apache.iceberg.spark.SparkCatalog);
-    construction fails fast otherwise. Tables are partitioned by ``iter``
-    so each crawl iteration is one Iceberg snapshot-visible partition:
-    commit = idempotent append (skipped when the iteration's partition
-    already exists — a resumed run re-reaches the same commit point
-    deterministically and must not double-append), read = partition-pruned
-    scan, time travel = ``iter <= upto`` exactly like the parquet store.
-
-    This sandbox ships no Iceberg runtime jars, so the class is exercised
-    for interface parity + fast-fail only (tests/test_config_sources_sinks
-    asserts the failure mode); on a cluster it is a drop-in for
-    SnapshotStore via ``CrawlConfig.iceberg_catalog``.
-    """
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str = "crawl"):
-        try:
-            impl = spark.conf.get(f"spark.sql.catalog.{catalog}")
-        except Exception:
-            impl = None
-        if not impl:
-            raise RuntimeError(
-                f"no Iceberg catalog configured: set spark.sql.catalog.{catalog} "
-                "(sandbox has no Iceberg runtime jars; use SnapshotStore)")
-        self.spark = spark
-        self.catalog = catalog
-        self.namespace = namespace
-        spark.sql(f"create namespace if not exists {catalog}.{namespace}")
-
-    def _full(self, table: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{table}"
-
-    def _exists(self, table: str) -> bool:
-        return self.spark.catalog.tableExists(self._full(table))
-
-    def last_iteration(self, table: str) -> int | None:
-        if not self._exists(table):
-            return None
-        row = self.spark.table(self._full(table)).selectExpr(
-            "max(iter) as m").collect()[0]
-        return row["m"]
-
-    def commit(self, df: DataFrame, table: str, iteration: int,
-               meta: dict | None = None) -> None:
-        from pyspark.sql import functions as F
-
-        if "iter" not in df.columns:
-            df = df.withColumn("iter", F.lit(iteration))
-        if not self._exists(table):
-            df.writeTo(self._full(table)).partitionedBy("iter").create()
-            return
-        done = (
-            self.spark.table(self._full(table))
-            .filter(F.col("iter") == iteration).limit(1).count()
-        )
-        if done:
-            return  # already committed (resume re-ran the iteration)
-        df.writeTo(self._full(table)).append()
-
-    def read(self, table: str, upto: int | None = None) -> DataFrame | None:
-        if not self._exists(table):
-            return None
-        df = self.spark.table(self._full(table))
-        if upto is not None:
-            from pyspark.sql import functions as F
-
-            df = df.filter(F.col("iter") <= upto)
-        return df
-
-    def read_iteration(self, table: str, iteration: int) -> DataFrame | None:
-        if not self._exists(table):
-            return None
-        from pyspark.sql import functions as F
-
-        return self.spark.table(self._full(table)).filter(
-            F.col("iter") == iteration)
 
 
 def write_bucketed(

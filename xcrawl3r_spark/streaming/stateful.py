@@ -23,7 +23,7 @@ any static DataFrame via the batch ``applyInPandas`` twin
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -142,15 +142,3 @@ def host_budget_stream(
         one_host, "host string, url string, n_host_total long",
         "n long", "update", GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, timeout_s: int = 60
-) -> Any:
-    """Drive a streaming frame to a memory sink until idle (availableNow)."""
-    q = (
-        stream_df.writeStream.format("memory").queryName(query_name)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
