@@ -29,7 +29,7 @@ from xcrawl3r_spark.functions.hashing import (  # noqa: E402
 )
 from xcrawl3r_spark.operators import dedupops, simsearch, textops  # noqa: E402
 from xcrawl3r_spark.operators import images as images_ops  # noqa: E402
-from xcrawl3r_spark.operators.dedup import anti_join_seen, build_bloom  # noqa: E402
+from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen  # noqa: E402
 from xcrawl3r_spark.operators.politeness import politeness_select  # noqa: E402
 from xcrawl3r_spark.plans.crawl import Crawler  # noqa: E402
 
@@ -157,11 +157,9 @@ def q_d1_bloom_anti_join(spark, sf_dir):
         _t(spark, sf_dir, "lineitem")
         .select(F.xxhash64("l_orderkey").alias("dedup_key")).distinct()
     )
-    bloom = build_bloom(
-        seen.select(F.col("dedup_key").alias("url_hash")), 8, 1 << 18, 7)
+    bloom = SeenFilter("bloom", 8, (1 << 18, 7)).build(seen, key="dedup_key")
     return anti_join_seen(
-        orders, seen, key="dedup_key", bloom=bloom,
-        bloom_partitions=8, bloom_bits=1 << 18, bloom_hashes=7,
+        orders, seen, key="dedup_key", seen_filter=bloom,
     ).select("o_orderkey", "o_totalprice")
 
 
@@ -169,19 +167,15 @@ def q_d1_cuckoo_anti_join(spark, sf_dir):
     """D1 cuckoo leg: the deletable-filter path (operators/cuckoo.py) must
     also equal the plain anti-join — no false negatives by construction
     (kick-chain overflow lands in a stash, property-tested)."""
-    from xcrawl3r_spark.operators.cuckoo import build_cuckoo
-
     orders = _t(spark, sf_dir, "orders").withColumn(
         "dedup_key", F.xxhash64("o_orderkey"))
     seen = (
         _t(spark, sf_dir, "lineitem")
         .select(F.xxhash64("l_orderkey").alias("dedup_key")).distinct()
     )
-    filt = build_cuckoo(
-        seen.select(F.col("dedup_key").alias("url_hash")), 8, 1 << 13)
+    filt = SeenFilter("cuckoo", 8, (1 << 13,)).build(seen, key="dedup_key")
     return anti_join_seen(
-        orders, seen, key="dedup_key", bloom=filt,
-        bloom_partitions=8, filter_kind="cuckoo",
+        orders, seen, key="dedup_key", seen_filter=filt,
     ).select("o_orderkey", "o_totalprice")
 
 

@@ -3,6 +3,8 @@
 import json
 import os
 
+import pytest
+
 from xcrawl3r_spark.config import CrawlConfig
 from xcrawl3r_spark.sinks.files import write_jsonl, write_txt
 from xcrawl3r_spark.sources.seeds import seeds_from_list_file, seeds_from_urls
@@ -83,6 +85,31 @@ def test_config_unknown_key_rejected(tmp_path):
         raise AssertionError("typo key must raise")
     except ValueError as e:
         assert "dephts" in str(e)
+
+
+def test_config_rejects_bad_filter_geometry():
+    """Seen-filter geometry fails at construction, not waves later inside
+    an executor fold (bits=100 died there with an IndexError; partitions=0
+    put every key in one partition)."""
+    for bad in (dict(bloom_bits=100), dict(bloom_bits=0),
+                dict(bloom_bits=-8), dict(bloom_partitions=0),
+                dict(bloom_hashes=0), dict(cuckoo_buckets=0),
+                dict(filter_kind="cuckoo", cuckoo_buckets=0),
+                dict(filter_kind="Bloom")):
+        with pytest.raises(ValueError):
+            CrawlConfig(**bad)
+    CrawlConfig(bloom_bits=8, bloom_partitions=1, bloom_hashes=1,
+                cuckoo_buckets=1)
+
+
+def test_config_env_bad_filter_geometry_fails_fast(monkeypatch):
+    monkeypatch.setenv("XCRAWL3R_BLOOM_BITS", "100")
+    with pytest.raises(ValueError, match="bloom_bits"):
+        CrawlConfig.from_yaml()
+    monkeypatch.setenv("XCRAWL3R_BLOOM_BITS", "1024")
+    monkeypatch.setenv("XCRAWL3R_BLOOM_PARTITIONS", "0")
+    with pytest.raises(ValueError, match="bloom_partitions"):
+        CrawlConfig.from_yaml()
 
 
 def test_seeds_from_urls_blank_filter_and_stable_ids(spark):

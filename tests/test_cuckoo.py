@@ -1,6 +1,7 @@
 """Partitioned cuckoo filter (the deletable seen-set fallback): no false
 negatives (incl. through merges and stash overflow), delete support,
-anti-join equivalence, crawl parity with filter_kind='cuckoo'."""
+anti-join equivalence, crawl parity with filter_kind='cuckoo', and a
+seen-filter handed to a crawler of another filter geometry."""
 
 import numpy as np
 import pytest
@@ -80,7 +81,7 @@ def test_false_positive_rate_sane():
 def test_partitioned_build_merge_probe_spark(spark):
     from pyspark.sql import functions as F
 
-    from xcrawl3r_spark.operators.dedup import anti_join_seen
+    from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen
 
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet") \
         .withColumn("dedup_key", F.xxhash64("o_orderkey"))
@@ -88,11 +89,12 @@ def test_partitioned_build_merge_probe_spark(spark):
         spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
         .select(F.xxhash64("l_orderkey").alias("dedup_key")).distinct()
     )
-    filt = C.build_cuckoo(
-        seen.select(F.col("dedup_key").alias("url_hash")), 4, 1 << 12)
+    # two halves built separately and merged on the driver
+    empty = SeenFilter("cuckoo", 4, (1 << 12,))
+    filt = empty.build(seen.filter("dedup_key % 2 = 0"), key="dedup_key").merge(
+        empty.build(seen.filter("dedup_key % 2 != 0"), key="dedup_key"))
     got = anti_join_seen(
-        orders, seen, key="dedup_key", bloom=filt, bloom_partitions=4,
-        filter_kind="cuckoo",
+        orders, seen, key="dedup_key", seen_filter=filt,
     ).select("o_orderkey")
     want = orders.join(seen, "dedup_key", "left_anti").select("o_orderkey")
     assert sorted(r[0] for r in got.collect()) == sorted(
@@ -137,7 +139,8 @@ def test_ttl_expire_and_recrawl(spark, kind):
                       cuckoo_buckets=1 << 10)
     c = Crawler(spark, cfg)
     res1 = c.crawl(seeds, pages_df)
-    assert res1.seen.count() == n and res1.seen_filter
+    assert res1.seen.count() == n and res1.seen_filter.tables
+    assert res1.seen_filter.kind == kind
     # expire everything first visited before iteration 4 (p0, p1, p2)
     surviving, filt = c.expire_seen(res1.seen, res1.seen_filter, before_iter=4)
     assert surviving.count() == n - 3
@@ -160,3 +163,48 @@ def test_ttl_expire_and_recrawl(spark, kind):
     surviving2, _ = c.expire_seen(
         res2.seen, res2.seen_filter, before_iter=res1.iterations + 1)
     assert {r["url"] for r in surviving2.collect()} == revisited
+
+
+@pytest.mark.parametrize("first_kind,second_bits", [
+    ("bloom", 1 << 16), ("bloom", 1 << 14), ("cuckoo", 1 << 16)],
+    ids=["bloom-resized", "bloom-repartitioned", "cuckoo-to-bloom"])
+def test_foreign_geometry_filter_keeps_seen_urls_seen(
+        spark, first_kind, second_bits):
+    """A seen_filter handed to a Crawler whose config has another filter
+    geometry (or kind) is probed and extended with its OWN geometry. Probed
+    with the second config's geometry it answers "unseen" for keys it holds
+    (or indexes past its bitset), which skips the exact anti-join and
+    re-fetches already-seen URLs — silently when only the partition count
+    differs."""
+    from xcrawl3r_spark.config import CrawlConfig
+    from xcrawl3r_spark.plans.crawl import Crawler
+    from xcrawl3r_spark.sources import datagen as G
+
+    params = G.GraphParams(hosts=3, pages_per_host=6)
+    seeds = G.seeds_df(spark, params, 3)
+    pages = G.pages_df(spark, params, distributed=False)
+    base = dict(domains=["test"], include_subdomains=True, depth=0,
+                parallelism=0)
+    res1 = Crawler(spark, CrawlConfig(
+        **base, filter_kind=first_kind, bloom_partitions=8,
+        bloom_bits=1 << 14, cuckoo_buckets=1 << 10)).crawl(seeds, pages)
+    first_seen = {(r["seed_id"], r["url"]) for r in res1.seen.collect()}
+
+    c2 = Crawler(spark, CrawlConfig(
+        **base, filter_kind="bloom", bloom_partitions=4,
+        bloom_bits=second_bits))
+    res2 = c2.crawl(seeds, pages, initial_seen=res1.seen,
+                    initial_filter=res1.seen_filter,
+                    start_iteration=res1.iterations + 1)
+    again = {(r["seed_id"], r["url"]) for r in res2.seen.filter(
+        f"iter > {res1.iterations}").collect()}
+    assert not again & first_seen
+    # the filter kept its own kind and geometry through the second crawl
+    first = res1.seen_filter
+    assert first.kind == first_kind and first.partitions == 8 and first.tables
+    assert (res2.seen_filter.kind, res2.seen_filter.partitions,
+            res2.seen_filter.geometry) == (
+        first.kind, first.partitions, first.geometry)
+    # expiry follows the filter's kind too, not c2's config
+    _, expired = c2.expire_seen(res1.seen, first, before_iter=2)
+    assert (expired.kind, expired.geometry) == (first.kind, first.geometry)

@@ -8,15 +8,15 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from xcrawl3r_spark.operators.dedup import (
+    SeenFilter,
     _bloom_positions,
     _set_bits,
     _test_bits,
     anti_join_seen,
-    bloom_probe_maybe_seen,
-    build_bloom,
 )
 
 BITS, K, PARTS = 1 << 12, 5, 4
+BLOOM = SeenFilter("bloom", PARTS, (BITS, K))
 
 
 @given(
@@ -53,18 +53,15 @@ def test_spark_bloom_anti_join_equals_exact(spark):
     cand = spark.createDataFrame(cand_keys, "dedup_key long")
     exact = {r["dedup_key"]
              for r in cand.join(seen, "dedup_key", "left_anti").collect()}
-    bloom = build_bloom(
-        seen.withColumnRenamed("dedup_key", "url_hash"), PARTS, BITS, K)
+    bloom = BLOOM.build(seen, key="dedup_key")
     got = {r["dedup_key"] for r in anti_join_seen(
-        cand, seen, key="dedup_key", bloom=bloom,
-        bloom_partitions=PARTS, bloom_bits=BITS, bloom_hashes=K).collect()}
+        cand, seen, key="dedup_key", seen_filter=bloom).collect()}
     assert got == exact
 
 
 def test_bloom_probe_flags_all_seen(spark):
     seen = spark.createDataFrame([(i,) for i in range(300)], "url_hash long")
-    bloom = build_bloom(seen, PARTS, BITS, K)
-    probed = bloom_probe_maybe_seen(seen, bloom, PARTS, BITS, K)
+    probed = BLOOM.build(seen).probe(seen)
     assert probed.filter("not maybe_seen").count() == 0  # no false negatives
 
 
@@ -73,10 +70,32 @@ def test_bloom_actually_prunes(spark):
     seen = spark.createDataFrame([(i,) for i in range(1000)], "url_hash long")
     fresh = spark.createDataFrame(
         [(i + 10_000_000,) for i in range(1000)], "url_hash long")
-    bloom = build_bloom(seen, PARTS, 1 << 16, 7)
-    probed = bloom_probe_maybe_seen(fresh, bloom, PARTS, 1 << 16, 7)
+    bloom = SeenFilter("bloom", PARTS, (1 << 16, 7)).build(seen)
+    probed = bloom.probe(fresh)
     fpr = probed.filter("maybe_seen").count() / 1000
     assert fpr < 0.05, f"FPR {fpr} too high"
+
+
+def test_seen_filter_refuses_foreign_geometry():
+    """A table read with another geometry answers "unseen" for keys it
+    holds, so merge refuses any kind/partitions/geometry difference, a
+    table refuses to load at the wrong size, and only cuckoo deletes."""
+    from xcrawl3r_spark.operators.dedup import BloomTable
+
+    a = SeenFilter("bloom", PARTS, (BITS, K), {0: bytes(BITS // 8)})
+    assert a.merge(a.empty()) == a
+    for other in (SeenFilter("bloom", 8, (BITS, K)),
+                  SeenFilter("bloom", PARTS, (BITS * 4, K)),
+                  SeenFilter("bloom", PARTS, (BITS, K + 2)),
+                  SeenFilter("cuckoo", PARTS, (64,))):
+        with pytest.raises(ValueError):
+            a.merge(other)
+        with pytest.raises(ValueError):
+            other.merge(a)
+    with pytest.raises(ValueError):
+        BloomTable.from_bytes(a.tables[0], BITS * 4, K)
+    with pytest.raises(ValueError):
+        a.delete(np.array([1, 2], dtype=np.int64))
 
 
 def test_ivf_topk_recall_and_exactness(spark, sf_dir):
@@ -218,11 +237,10 @@ def test_stale_keys_keep_anti_join_exact(spark):
     seen_new = spark.range(1500, 1800).select(
         F.xxhash64("id").alias("dedup_key"))  # NOT folded into the filter
     seen = seen_old.unionByName(seen_new)
-    bloom = build_bloom(
-        seen_old.select(F.col("dedup_key").alias("url_hash")), 4, 1 << 16, 5)
+    bloom = SeenFilter("bloom", 4, (1 << 16, 5)).build(
+        seen_old, key="dedup_key")
     got = anti_join_seen(
-        cand, seen, key="dedup_key", bloom=bloom, bloom_partitions=4,
-        bloom_bits=1 << 16, bloom_hashes=5, keys_unique=True,
+        cand, seen, key="dedup_key", seen_filter=bloom, keys_unique=True,
         stale_keys=seen_new,
     )
     want = cand.join(seen, "dedup_key", "left_anti")
@@ -230,7 +248,7 @@ def test_stale_keys_keep_anti_join_exact(spark):
         r["meta"] for r in want.collect())
     # empty-filter fast path must honor stale_keys too
     got_empty = anti_join_seen(
-        cand, seen_new, key="dedup_key", bloom={}, bloom_partitions=4,
+        cand, seen_new, key="dedup_key", seen_filter=bloom.empty(),
         keys_unique=True, stale_keys=seen_new)
     want_empty = cand.join(seen_new, "dedup_key", "left_anti")
     assert got_empty.count() == want_empty.count() == 1700

@@ -1,5 +1,5 @@
 """Operator-level tests: extraction kernel (E1-E4), politeness window (A1),
-robots enforcement, salted repartition, sinks, seed frontier."""
+robots enforcement, sinks, seed frontier."""
 
 from pyspark.sql import functions as F
 
@@ -9,7 +9,6 @@ from xcrawl3r_spark.operators.extract import extract_links
 from xcrawl3r_spark.operators.politeness import (
     politeness_select,
     robots_filter,
-    salted_repartition,
 )
 from xcrawl3r_spark.plans.crawl import Crawler
 
@@ -69,17 +68,6 @@ class TestPoliteness:
             got = sorted(r["url_hash"] for r in sel.filter(F.col("host") == h).collect())
             want = sorted(r["url_hash"] for r in df.filter(F.col("host") == h).collect())[:3]
             assert got == want
-
-    def test_salted_repartition_spreads_hot_host(self, spark):
-        df = spark.createDataFrame(
-            [("hot.test", i) for i in range(1000)],
-            "host string, url_hash long")
-        parts = (
-            salted_repartition(df, salt=8, partitions=8)
-            .withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().collect()
-        )
-        assert len(parts) >= 4  # one host spread over >=4 partitions
 
     def test_robots_filter(self, spark):
         frontier = spark.createDataFrame(

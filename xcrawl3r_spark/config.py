@@ -107,7 +107,8 @@ class CrawlConfig:
     #: bits per partition bitset (sized for ~1% FPR at expected load)
     bloom_bits: int = 1 << 20
     bloom_hashes: int = 7
-    #: salt buckets for hot-host skew (salted repartition key)
+    #: salt buckets for hot-host skew: politeness_flag's two-phase top-k
+    #: ranks per (seed, host, pmod(url_hash, skew_salt)) bucket first
     skew_salt: int = 8
     #: route media-ext URLs (F3 deny-list) into the image-ingest branch
     #: instead of dropping them (north rule)
@@ -140,9 +141,13 @@ class CrawlConfig:
         if self.fetch_mode not in ("table", "http"):
             raise ValueError(
                 f"fetch_mode must be 'table' or 'http', got {self.fetch_mode!r}")
-        if self.filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"filter_kind must be 'bloom' or 'cuckoo', got {self.filter_kind!r}")
+        # filter_kind and the seen-filter geometry are checked where the
+        # geometry is defined (SeenFilter) — every kind's, so switching
+        # filter_kind later cannot reach an unchecked size
+        from xcrawl3r_spark.operators.dedup import SeenFilter
+
+        for kind in (self.filter_kind, *SeenFilter.KINDS):
+            SeenFilter.for_config(self, kind)
 
     @classmethod
     def create_or_update(cls, path: str) -> None:

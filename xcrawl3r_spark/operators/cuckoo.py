@@ -8,15 +8,15 @@ periodic full rebuilds. A cuckoo filter supports delete() at the same
 ~O(1) probe cost and comparable space at low FPR (16-bit fingerprints,
 4-way buckets -> FPR ~ 2*4/2^16 ~ 1.2e-4).
 
-Layout mirrors operators/dedup.py's Bloom exactly: the key space is
-hash-range partitioned (pid = h mod P), each partition owns one numpy
-table of shape (n_buckets, 4) uint16 fingerprints (0 = empty slot) plus a
-small deterministic stash (evictions after max kicks land in the stash,
-so the structure has NO false negatives by construction — property
-tested). Tables are built executor-side per partition, merged on the
-driver by re-inserting occupied slots (alternate bucket is recoverable
-from (bucket, fp): b2 = b1 xor H(fp) — partial-key cuckoo), and broadcast
-as bytes. All arithmetic is integer/deterministic: resume stays
+This module holds one partition's table only. Partitioning, the
+executor-side build, the driver merge and the broadcast probe are shared
+with the Bloom table in operators/dedup.py (``SeenFilter``). Each table is
+a numpy array of shape (n_buckets, 4) uint16 fingerprints (0 = empty slot)
+plus a small deterministic stash (evictions after max kicks land in the
+stash, so the structure has NO false negatives by construction — property
+tested). Two tables merge by re-inserting occupied slots (the alternate
+bucket is recoverable from (bucket, fp): b2 = b1 xor H(fp) — partial-key
+cuckoo). All arithmetic is integer/deterministic: resume stays
 bit-identical.
 
 At 10^10 keys: 16 bits x 1.05 slots/key ~ 2.6 GB total across partitions
@@ -26,12 +26,7 @@ same posture as the Bloom bitsets (SURVEY §7 arithmetic).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -170,10 +165,15 @@ class CuckooTable:
         return head + stash + self.table.tobytes()
 
     @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooTable":
+    def from_bytes(cls, raw: bytes, n_buckets: int | None = None) -> "CuckooTable":
+        """Inverse of to_bytes; ``n_buckets`` (the requested geometry, if
+        given) must round to the serialized table's row count."""
         import struct
 
         nb, ns = struct.unpack("<II", raw[:8])
+        if n_buckets is not None and _next_pow2(n_buckets) != nb:
+            raise ValueError(
+                f"cuckoo table has {nb} buckets, geometry asks for {n_buckets}")
         pos = 8
         stash = []
         for _ in range(ns):
@@ -196,103 +196,3 @@ class CuckooTable:
             self._insert_one(int(b), fp)
         for b, fp in other.stash:
             self._insert_one(int(b), int(fp))
-
-
-# ---------------------------------------------------------------------------
-# partitioned build / merge / probe — same surface as dedup.py's Bloom
-# ---------------------------------------------------------------------------
-
-def build_cuckoo(
-    seen: DataFrame, partitions: int, n_buckets: int
-) -> dict[int, bytes]:
-    """Build per-hash-range cuckoo tables executor-side; driver merges."""
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, CuckooTable] = {}
-        for pdf in batches:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            pids = (hashes % partitions + partitions) % partitions
-            for pid in np.unique(pids):
-                t = local.setdefault(int(pid), CuckooTable(n_buckets))
-                t.insert_hashes(hashes[pids == pid])
-        yield pd.DataFrame(
-            {"pid": list(local), "tbl": [t.to_bytes() for t in local.values()]}
-        )
-
-    pieces = (
-        seen.select("url_hash").mapInPandas(fold, "pid int, tbl binary").collect()
-    )
-    merged: dict[int, CuckooTable] = {}
-    for row in pieces:
-        t = CuckooTable.from_bytes(bytes(row["tbl"]))
-        if row["pid"] in merged:
-            merged[row["pid"]].merge_from(t)
-        else:
-            merged[row["pid"]] = t
-    return {pid: t.to_bytes() for pid, t in merged.items()}
-
-
-def merge_cuckoos(
-    dst: dict[int, bytes] | None, src: dict[int, bytes]
-) -> dict[int, bytes]:
-    if dst is None:
-        return dict(src)
-    out = dict(dst)
-    for pid, raw in src.items():
-        if pid in out:
-            a = CuckooTable.from_bytes(out[pid])
-            a.merge_from(CuckooTable.from_bytes(raw))
-            out[pid] = a.to_bytes()
-        else:
-            out[pid] = raw
-    return out
-
-
-def delete_from_cuckoo(
-    filt: dict[int, bytes], hashes: np.ndarray, partitions: int
-) -> dict[int, bytes]:
-    """Windowed-seen eviction: remove keys (the operation Bloom cannot do)."""
-    out = dict(filt)
-    h = np.asarray(hashes, dtype=np.int64)
-    pids = (h % partitions + partitions) % partitions
-    for pid in np.unique(pids):
-        if int(pid) not in out:
-            continue
-        t = CuckooTable.from_bytes(out[int(pid)])
-        t.delete_hashes(h[pids == pid])
-        out[int(pid)] = t.to_bytes()
-    return out
-
-
-def cuckoo_probe_maybe_seen(
-    df: DataFrame, filt: dict[int, bytes], partitions: int,
-    key: str = "url_hash",
-) -> DataFrame:
-    """Add boolean ``maybe_seen`` by probing broadcast tables (no false
-    negatives — stash catches kick-chain overflow)."""
-    spark = df.sparkSession
-    b = spark.sparkContext.broadcast(filt)
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tables = {pid: CuckooTable.from_bytes(raw) for pid, raw in b.value.items()}
-        for pdf in batches:
-            hashes = pdf[key].to_numpy(dtype=np.int64)
-            maybe = np.zeros(len(hashes), dtype=bool)
-            if len(hashes):
-                pids = (hashes % partitions + partitions) % partitions
-                for pid in np.unique(pids):
-                    t = tables.get(int(pid))
-                    if t is None:
-                        continue
-                    mask = pids == pid
-                    maybe[mask] = t.probe_hashes(hashes[mask])
-            out = pdf.copy()
-            out["maybe_seen"] = maybe
-            yield out
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    return df.mapInPandas(probe, schema)

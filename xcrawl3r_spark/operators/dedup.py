@@ -1,5 +1,5 @@
-"""D1-D3: the distributed URL-seen set — partitioned Bloom pre-filter +
-exact left-anti join.
+"""D1-D3: the distributed URL-seen set — partitioned probabilistic
+pre-filter (Bloom, or the deletable cuckoo filter) + exact left-anti join.
 
 The reference's seen set is colly's in-memory FNV-64 hash set per collector
 (pkg/xcrawl3r/xcrawl3r.go:31,347,422). At 10^10 URLs that set is ~160 GB of
@@ -10,28 +10,38 @@ here:
    (seed_id, url_hash) — per-seed scope mirrors the reference's fresh
    collector per seed (xcrawl3r.go:52); ``global_dedup`` collapses the key
    to url_hash only;
-2. a *partitioned* Bloom filter over ``pmod(url_hash, P)`` hash-ranges is
-   built executor-side (mapInPandas -> one bitset per partition, OR-reduced
-   per partition id on the driver, broadcast as a dict {pid: bitset}) —
-   only bitsets ever cross the wire, never the seen rows;
-3. candidates probe their partition's bitset vectorized (numpy) — Bloom
-   has no false negatives, so survivors of the NOT-maybe-seen test are
+2. a *partitioned* filter (``SeenFilter``) over ``pmod(url_hash, P)``
+   hash-ranges: one table per partition — a Bloom bitset, or a cuckoo
+   table (operators/cuckoo.py) that can delete keys for TTL re-crawls —
+   built executor-side, merged per pid on the driver and broadcast as
+   {pid: bytes}; only tables cross the wire, never the seen rows. The
+   filter carries its kind and geometry, so it is always probed and
+   extended with the geometry that built it;
+3. candidates probe their partition's table vectorized (numpy) — neither
+   kind has false negatives, so survivors of the NOT-maybe-seen test are
    definitely new; the *maybe-seen* minority goes through the exact
    left-anti hash join to kill false positives.
 
-At bench scale the Bloom pass removes ~99% of the anti-join probe side; at
-10^10 scale each partition bitset stays ≤ a few hundred MB and partitions
-are probed independently (no single giant broadcast).
+The crawl loop (plans/crawl.py) folds new seen keys into the filter only
+every ``BLOOM_FOLD_EVERY`` (4) waves, and an empty filter skips the probe:
+a fresh crawl probes from wave 5 on, so a 3-wave crawl never probes and
+pays for the filter only in its one tail fold. At 10^10 scale each
+partition table stays ≤ a few hundred MB and partitions are probed
+independently (no single giant broadcast).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field, replace
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
+
+from xcrawl3r_spark.operators.cuckoo import CuckooTable
 
 
 def _bloom_positions(hashes: np.ndarray, bits: int, k: int) -> Iterator[np.ndarray]:
@@ -53,111 +63,197 @@ def _test_bits(bitset: np.ndarray, pos: np.ndarray) -> np.ndarray:
             >> (pos & np.uint64(7)).astype(np.uint8)) & np.uint8(1) > 0
 
 
-def build_bloom(
-    seen: DataFrame, partitions: int, bits: int, k: int
-) -> dict[int, bytes]:
-    """Build the partitioned Bloom filter over seen.url_hash.
+class BloomTable:
+    """One partition's Bloom bitset: ``bits`` bits, ``hashes`` positions
+    per key. Same surface as cuckoo.CuckooTable (minus delete)."""
 
-    Executor-side: each task folds its rows into per-pid bitsets and emits
-    (pid, bitset_bytes); driver ORs bitsets per pid. Cross-the-wire volume
-    is O(tasks * bits/8), independent of row count.
+    def __init__(self, bits: int, hashes: int, bitset: np.ndarray | None = None):
+        self.bits, self.hashes = bits, hashes
+        self.bitset = (np.zeros(bits // 8, dtype=np.uint8)
+                       if bitset is None else bitset)
+
+    def insert_hashes(self, h: np.ndarray) -> None:
+        for pos in _bloom_positions(h, self.bits, self.hashes):
+            _set_bits(self.bitset, pos)
+
+    def probe_hashes(self, h: np.ndarray) -> np.ndarray:
+        hit = np.ones(len(h), dtype=bool)
+        for pos in _bloom_positions(h, self.bits, self.hashes):
+            hit &= _test_bits(self.bitset, pos)
+        return hit
+
+    def merge_from(self, other: "BloomTable") -> None:
+        self.bitset |= other.bitset
+
+    def to_bytes(self) -> bytes:
+        return self.bitset.tobytes()
+
+    @classmethod
+    def from_bytes(cls, raw: bytes, bits: int, hashes: int) -> "BloomTable":
+        if len(raw) * 8 != bits:
+            raise ValueError(
+                f"bloom table has {len(raw) * 8} bits, geometry asks for {bits}")
+        return cls(bits, hashes, np.frombuffer(raw, dtype=np.uint8).copy())
+
+
+_TABLES = {"bloom": BloomTable, "cuckoo": CuckooTable}
+
+
+@dataclass(frozen=True)
+class SeenFilter:
+    """A hash-range partitioned seen-filter that carries its own geometry.
+
+    ``geometry`` is ``(bits, hashes)`` for kind "bloom" and ``(buckets,)``
+    for kind "cuckoo"; ``tables`` maps a partition id
+    (``pmod(key, partitions)``) to that partition's serialized table —
+    partitions no key hashed to have no table. Every operation reads the
+    geometry from the filter itself, so a filter is always probed and
+    extended with the geometry that built it, and ``merge`` refuses a
+    filter of another geometry. build/merge/delete return new filters.
     """
-    nbytes = bits // 8
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-            pids = (hashes % partitions + partitions) % partitions
-            for pid in np.unique(pids):
-                bs = local.setdefault(int(pid), np.zeros(nbytes, dtype=np.uint8))
-                sub = hashes[pids == pid]
-                for pos in _bloom_positions(sub, bits, k):
-                    _set_bits(bs, pos)
-        yield pd.DataFrame(
-            {"pid": list(local), "bitset": [b.tobytes() for b in local.values()]}
-        )
+    KINDS = tuple(_TABLES)
 
-    pieces = (
-        seen.select("url_hash")
-        .mapInPandas(fold, "pid int, bitset binary")
-        .collect()
-    )
-    merged: dict[int, np.ndarray] = {}
-    for row in pieces:
-        bs = np.frombuffer(row["bitset"], dtype=np.uint8)
-        if row["pid"] in merged:
-            merged[row["pid"]] = merged[row["pid"]] | bs
+    kind: str
+    partitions: int
+    geometry: tuple[int, ...]
+    tables: dict[int, bytes] = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        # checked here, once: a bad size would otherwise surface waves
+        # later as an IndexError inside an executor fold (bits not a
+        # multiple of 8) or put every key in one partition (P = 0)
+        if self.kind not in _TABLES:
+            raise ValueError(
+                f"filter_kind must be 'bloom' or 'cuckoo', got {self.kind!r}")
+        if self.partitions < 1:
+            raise ValueError(
+                f"bloom_partitions must be >= 1, got {self.partitions}")
+        if self.kind == "bloom":
+            bits, hashes = self.geometry
+            if bits < 8 or bits % 8:
+                raise ValueError(
+                    f"bloom_bits must be a positive multiple of 8, got {bits}")
+            if hashes < 1:
+                raise ValueError(f"bloom_hashes must be >= 1, got {hashes}")
         else:
-            merged[row["pid"]] = bs
-    return {pid: bs.tobytes() for pid, bs in merged.items()}
+            (buckets,) = self.geometry
+            if buckets < 1:
+                raise ValueError(f"cuckoo_buckets must be >= 1, got {buckets}")
 
+    @classmethod
+    def for_config(cls, cfg, kind: str | None = None) -> "SeenFilter":
+        """An empty filter of ``kind`` (default ``cfg.filter_kind``) with
+        the config's geometry."""
+        kind = kind or cfg.filter_kind
+        geometry = ((cfg.bloom_bits, cfg.bloom_hashes) if kind == "bloom"
+                    else (cfg.cuckoo_buckets,))
+        return cls(kind, cfg.bloom_partitions, geometry)
 
-def merge_blooms(
-    dst: dict[int, bytes] | None, src: dict[int, bytes]
-) -> dict[int, bytes]:
-    """OR ``src`` partition bitsets into ``dst`` (incremental maintenance).
+    def empty(self) -> "SeenFilter":
+        """Same kind and geometry, no keys."""
+        return replace(self, tables={})
 
-    Bloom filters are monotone — the union of two filters over disjoint
-    row sets is the filter over the union — so the crawl loop builds each
-    iteration's filter from the NEW seen rows only and folds it in, instead
-    of rescanning the whole seen set every iteration (which is quadratic
-    over the crawl's lifetime)."""
-    if dst is None:
-        return dict(src)
-    out = dict(dst)
-    for pid, raw in src.items():
-        if pid in out:
-            a = np.frombuffer(out[pid], dtype=np.uint8)
-            b = np.frombuffer(raw, dtype=np.uint8)
-            out[pid] = (a | b).tobytes()
-        else:
-            out[pid] = raw
-    return out
+    def _new(self):
+        return _TABLES[self.kind](*self.geometry)
 
+    def _load(self, raw: bytes):
+        return _TABLES[self.kind].from_bytes(raw, *self.geometry)
 
-def bloom_probe_maybe_seen(
-    df: DataFrame, bloom: dict[int, bytes], partitions: int, bits: int, k: int,
-    key: str = "url_hash",
-) -> DataFrame:
-    """Add boolean column ``maybe_seen`` by probing the broadcast bitsets.
+    def _fold(self, pieces) -> "SeenFilter":
+        """Merge (pid, table bytes) pieces into this filter's tables, per
+        pid (OR for Bloom, re-insert for cuckoo)."""
+        raws = dict(self.tables)
+        live: dict = {}  # pids that received a second piece
+        for pid, raw in pieces:
+            if pid not in raws:
+                raws[pid] = raw
+                continue
+            if pid not in live:
+                live[pid] = self._load(raws[pid])
+            live[pid].merge_from(self._load(raw))
+        raws.update((pid, t.to_bytes()) for pid, t in live.items())
+        return replace(self, tables=raws)
 
-    Rows with maybe_seen=false are DEFINITELY unseen (no false negatives)
-    and can skip the exact anti-join.
-    """
-    spark = df.sparkSession
-    b_bloom = spark.sparkContext.broadcast(bloom)
+    def build(self, keys: DataFrame, key: str = "url_hash") -> "SeenFilter":
+        """This filter with every ``keys[key]`` folded in.
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitsets = {
-            pid: np.frombuffer(raw, dtype=np.uint8)
-            for pid, raw in b_bloom.value.items()
-        }
-        for pdf in batches:
-            hashes = pdf[key].to_numpy(dtype=np.int64)
-            maybe = np.zeros(len(hashes), dtype=bool)
-            if len(hashes):
-                pids = (hashes % partitions + partitions) % partitions
-                for pid in np.unique(pids):
-                    bs = bitsets.get(int(pid))
+        Executor-side: each task folds its rows into one table per pid and
+        emits (pid, table bytes); one collect brings those to the driver,
+        which merges them per pid. Cross-the-wire volume is
+        O(tasks * table size), independent of row count.
+        """
+        shell = self.empty()  # the closure ships the geometry, not tables
+
+        def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            local: dict = {}
+            for pdf in batches:
+                h = pdf[key].to_numpy(dtype=np.int64)
+                pids = h % shell.partitions
+                for pid in np.unique(pids).tolist():
+                    if pid not in local:
+                        local[pid] = shell._new()
+                    local[pid].insert_hashes(h[pids == pid])
+            yield pd.DataFrame(
+                {"pid": list(local), "tbl": [t.to_bytes() for t in local.values()]})
+
+        rows = keys.select(key).mapInPandas(fold, "pid int, tbl binary").collect()
+        return self._fold((r["pid"], bytes(r["tbl"])) for r in rows)
+
+    def merge(self, other: "SeenFilter") -> "SeenFilter":
+        """The union of two filters of one kind and geometry. Raises
+        ValueError otherwise: a table probed with another geometry answers
+        "unseen" for keys it holds."""
+        mine = (self.kind, self.partitions, self.geometry)
+        theirs = (other.kind, other.partitions, other.geometry)
+        if mine != theirs:
+            raise ValueError(f"cannot merge seen-filters {theirs} into {mine}")
+        return self._fold(other.tables.items())
+
+    def delete(self, hashes: np.ndarray) -> "SeenFilter":
+        """Windowed-seen eviction: remove keys. Cuckoo only — Bloom bits
+        cannot be unset."""
+        if self.kind != "cuckoo":
+            raise ValueError(f"a {self.kind} filter cannot delete keys")
+        h = np.asarray(hashes, dtype=np.int64)
+        pids = h % self.partitions
+        out = dict(self.tables)
+        for pid in np.unique(pids).tolist():
+            if pid in out:
+                t = self._load(out[pid])
+                t.delete_hashes(h[pids == pid])
+                out[pid] = t.to_bytes()
+        return replace(self, tables=out)
+
+    def probe(self, df: DataFrame, key: str = "url_hash") -> DataFrame:
+        """Add boolean column ``maybe_seen`` by probing the broadcast tables.
+
+        Rows with maybe_seen=false are DEFINITELY unseen (no false
+        negatives) and can skip the exact anti-join.
+        """
+        b_tables = df.sparkSession.sparkContext.broadcast(self.tables)
+        shell = self.empty()
+
+        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            tables = {pid: shell._load(raw) for pid, raw in b_tables.value.items()}
+            for pdf in batches:
+                h = pdf[key].to_numpy(dtype=np.int64)
+                pids = h % shell.partitions
+                maybe = np.zeros(len(h), dtype=bool)
+                for pid in np.unique(pids).tolist():
+                    t = tables.get(pid)
+                    if t is None:
+                        continue  # no table for this partition -> unseen
                     mask = pids == pid
-                    if bs is None:
-                        continue  # empty partition bitset -> definitely unseen
-                    sub = hashes[mask]
-                    hit = np.ones(len(sub), dtype=bool)
-                    for pos in _bloom_positions(sub, bits, k):
-                        hit &= _test_bits(bs, pos)
-                    maybe[mask] = hit
-            out = pdf.copy()
-            out["maybe_seen"] = maybe
-            yield out
+                    maybe[mask] = t.probe_hashes(h[mask])
+                out = pdf.copy()
+                out["maybe_seen"] = maybe
+                yield out
 
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-    return df.mapInPandas(probe, schema)
+        schema = StructType(
+            list(df.schema.fields) + [StructField("maybe_seen", BooleanType())]
+        )
+        return df.mapInPandas(probe, schema)
 
 
 def anti_join_seen(
@@ -165,21 +261,18 @@ def anti_join_seen(
     seen: DataFrame,
     *,
     key: str = "dedup_key",
-    bloom: dict[int, bytes] | None = None,
-    bloom_partitions: int = 8,
-    bloom_bits: int = 1 << 20,
-    bloom_hashes: int = 7,
+    seen_filter: SeenFilter | None = None,
     keys_unique: bool = False,
-    filter_kind: str = "bloom",
     stale_keys: DataFrame | None = None,
 ) -> DataFrame:
     """candidates \\ seen on ``key`` (D1). Per-seed scope (D2) is folded
     into the key upstream: dedup_key = xxhash64(seed_id, url) — the same
     hash-set membership semantics as colly's per-collector FNV-64 storage.
 
-    With a Bloom filter: definitely-new rows bypass the shuffle entirely;
-    only maybe-seen rows are anti-joined exactly. Equivalent to the plain
-    anti-join by the no-false-negative property (property-tested).
+    With a ``seen_filter``: definitely-new rows bypass the shuffle
+    entirely; only maybe-seen rows are anti-joined exactly. Equivalent to
+    the plain anti-join by the no-false-negative property
+    (property-tested).
 
     ``keys_unique``: the crawl loop only ever inserts post-anti-join,
     batch-deduped rows, so seen keys are unique by construction — skip the
@@ -191,7 +284,7 @@ def anti_join_seen(
     keys the filter has absorbed, so bypassing rows are exactly
     anti-joined against this (small: a few recent iterations) set.
     """
-    if bloom is not None and not bloom:
+    if seen_filter is not None and not seen_filter.tables:
         # empty filter: every candidate is new EXCEPT keys awaiting their
         # filter fold — skip the Python probe round-trip, keep the (small)
         # exact stale check
@@ -201,17 +294,9 @@ def anti_join_seen(
     seen_keys = seen.select(key)
     if not keys_unique:
         seen_keys = seen_keys.distinct()
-    if bloom is None:
+    if seen_filter is None:
         return candidates.join(seen_keys, key, "left_anti")
-    if filter_kind == "cuckoo":
-        from xcrawl3r_spark.operators.cuckoo import cuckoo_probe_maybe_seen
-
-        probed = cuckoo_probe_maybe_seen(
-            candidates, bloom, bloom_partitions, key=key)
-    else:
-        probed = bloom_probe_maybe_seen(
-            candidates, bloom, bloom_partitions, bloom_bits, bloom_hashes,
-            key=key)
+    probed = seen_filter.probe(candidates, key=key)
     # the fresh/maybe split consumes `probed` in BOTH union branches, and
     # Spark does not share common subplans across branches — without a
     # materialization the Python probe stage executes twice per batch.

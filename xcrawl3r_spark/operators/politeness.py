@@ -10,11 +10,11 @@ url_hash); overflow rows are re-queued to the next iteration at the same
 depth. Budget = P x iteration-quantum; no URL is ever dropped, so the final
 seen/edges sets match the reference (which also never drops, only delays).
 
-Skew: a hot host (~30% of frontier) would serialize on one shuffle
-partition; the selection window is per (seed_id, host) so Spark hashes on
-composite keys, and the downstream fetch repartitions on a salted key
-``(host, pmod(url_hash, skew_salt))`` so one host's fetches spread over
-``skew_salt`` partitions. AQE skew-join handles residual imbalance.
+Skew: a hot host (~30% of frontier) would serialize its selection window
+on one shuffle partition, so ``politeness_flag`` ranks in two phases: a
+salted partial top-k per (seed_id, host, pmod(url_hash, skew_salt)), then
+the exact window over the survivors. The fetch downstream is a plain join
+on url, and AQE skew-join handles residual imbalance.
 """
 
 from __future__ import annotations
@@ -90,16 +90,6 @@ def politeness_select(
     selected = ranked.filter(F.col("_sel")).drop("_sel")
     overflow = ranked.filter(~F.col("_sel")).drop("_sel")
     return selected, overflow
-
-
-def salted_repartition(df: DataFrame, salt: int, partitions: int | None = None) -> DataFrame:
-    """Spread hot hosts over `salt` buckets: repartition by
-    (host, pmod(url_hash, salt)). Kills single-partition hot-host skew in
-    the fetch/extract stage while keeping host locality within buckets."""
-    saltc = F.pmod(F.col("url_hash"), F.lit(salt))
-    if partitions:
-        return df.repartition(partitions, F.col("host"), saltc)
-    return df.repartition(F.col("host"), saltc)
 
 
 def parse_robots_rules(fetched_robots: DataFrame) -> DataFrame:

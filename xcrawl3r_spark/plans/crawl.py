@@ -13,7 +13,7 @@ Per-iteration dataflow (SURVEY §3.4):
       --(robots allow/deny broadcast join -> flag, optional)-->       north
       --(per-(seed,host) budget top-k; ineligible rows ride along
          flagged — ONE checkpoint/iter; overflow requeued)-->         A1
-      --(salted repartition, fetch = left join vs pages)-->           S4
+      --(fetch = left join vs pages on url)-->                        S4
       --(mapInPandas extraction: href/src/regex + .min. variants)--> E1-E4
       --(scope rlike)--> edges append (emit-per-occurrence)          F1/D3
       frontier[i+1] = extracted ∪ overflow, depth-gated              A4
@@ -37,12 +37,7 @@ from pyspark.sql import functions as F
 
 from xcrawl3r_spark.config import CrawlConfig
 from xcrawl3r_spark.functions import urls as U
-from xcrawl3r_spark.operators.cuckoo import build_cuckoo, merge_cuckoos
-from xcrawl3r_spark.operators.dedup import (
-    anti_join_seen,
-    build_bloom,
-    merge_blooms,
-)
+from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen
 from xcrawl3r_spark.operators.extract import extract_links
 from xcrawl3r_spark.operators.politeness import (
     collapse_robots_rules,
@@ -68,6 +63,13 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 @dataclass
 class CrawlResult:
     edges: DataFrame    # seed_id, src_url, url, kind, depth, iter
@@ -77,9 +79,11 @@ class CrawlResult:
     iterations: int = 0
     #: per-iteration wall-clock phase timings + row counts (A6 metrics)
     metrics: list[dict] = field(default_factory=list)
-    #: the final probabilistic seen-filter (all seen keys folded) — feed
-    #: to expire_seen()/crawl(initial_filter=...) for TTL re-crawls
-    seen_filter: dict | None = None
+    #: the final probabilistic seen-filter (all seen keys folded), or None
+    #: with bloom_enabled off. Self-describing: it carries its kind and
+    #: geometry, so expire_seen()/crawl(initial_filter=...) on any Crawler
+    #: probe and extend it with the geometry that built it
+    seen_filter: SeenFilter | None = None
 
 
 class Crawler:
@@ -122,19 +126,6 @@ class Crawler:
             .withColumn("dedup_key", self._dedup_key())
             .withColumn("host", F.lower(F.try_parse_url("url", F.lit("HOST"))))
         )
-
-    # -- seen-filter dispatch (bloom | cuckoo) ---------------------------
-    def _build_filter(self, keys_df):
-        cfg = self.cfg
-        if cfg.filter_kind == "cuckoo":
-            return build_cuckoo(keys_df, cfg.bloom_partitions, cfg.cuckoo_buckets)
-        return build_bloom(
-            keys_df, cfg.bloom_partitions, cfg.bloom_bits, cfg.bloom_hashes)
-
-    def _merge_filter(self, dst, src):
-        if self.cfg.filter_kind == "cuckoo":
-            return merge_cuckoos(dst, src)
-        return merge_blooms(dst, src)
 
     # -- A5: range-partitioned priority buckets --------------------------
     def _priority_buckets(self, frontier: DataFrame) -> DataFrame:
@@ -195,9 +186,9 @@ class Crawler:
 
     # -- TTL / windowed seen-set (re-crawl support) ----------------------
     def expire_seen(
-        self, seen: DataFrame, filt: dict[int, bytes] | None,
+        self, seen: DataFrame, filt: SeenFilter | None,
         before_iter: int, max_expired_collect: int = 5_000_000,
-    ) -> tuple[DataFrame, dict[int, bytes] | None]:
+    ) -> tuple[DataFrame, SeenFilter | None]:
         """Windowed seen-set: drop rows first visited before
         ``before_iter`` so a follow-up ``crawl(initial_seen=...,
         initial_filter=...)`` re-visits them (TTL re-crawl).
@@ -210,33 +201,27 @@ class Crawler:
         would expire the most recently visited URLs and keep the stalest
         — the inverse of a TTL window.
 
-        With ``filter_kind='cuckoo'`` the expired keys are DELETED from
-        the filter incrementally (the capability the cuckoo fallback
-        exists for — Bloom bits cannot be unset). The expired-key batch is
-        driver-applied, bounded by the expiry window (one TTL quantum of
-        URLs, NOT the lifetime seen set); ``max_expired_collect`` guards
-        the bound — beyond it (or with Bloom) the filter is rebuilt
-        distributed from the surviving rows instead.
+        The filter's own kind decides, not this Crawler's config: a
+        cuckoo filter has the expired keys DELETED incrementally (the
+        capability the cuckoo fallback exists for — Bloom bits cannot be
+        unset). The expired-key batch is driver-applied, bounded by the
+        expiry window (one TTL quantum of URLs, NOT the lifetime seen
+        set); ``max_expired_collect`` guards the bound — beyond it (or
+        with Bloom) the filter is rebuilt distributed from the surviving
+        rows instead, with its own geometry.
         """
         surviving = seen.filter(F.col("iter") >= before_iter)
-        if filt is None or not self.cfg.bloom_enabled:
-            return surviving, filt
+        if filt is None:
+            return surviving, None
         expired = seen.filter(F.col("iter") < before_iter).select("dedup_key")
-        if self.cfg.filter_kind == "cuckoo":
-            n_expired = expired.count()
-            if n_expired <= max_expired_collect:
-                import numpy as np
+        if filt.kind == "cuckoo" and expired.count() <= max_expired_collect:
+            import numpy as np
 
-                from xcrawl3r_spark.operators.cuckoo import delete_from_cuckoo
-
-                hashes = np.array(
-                    [r["dedup_key"] for r in expired.collect()],
-                    dtype=np.int64)
-                return surviving, delete_from_cuckoo(
-                    filt, hashes, self.cfg.bloom_partitions)
+            hashes = np.array(
+                [r["dedup_key"] for r in expired.collect()], dtype=np.int64)
+            return surviving, filt.delete(hashes)
         # Bloom (no deletes) or over-bound cuckoo window: distributed rebuild
-        return surviving, self._build_filter(
-            surviving.select(F.col("dedup_key").alias("url_hash")))
+        return surviving, filt.empty().build(surviving, key="dedup_key")
 
     # -- the BFS loop ----------------------------------------------------
     def crawl(
@@ -249,7 +234,7 @@ class Crawler:
         initial_frontier: DataFrame | None = None,
         initial_seen: DataFrame | None = None,
         initial_robots_rules: DataFrame | None = None,
-        initial_filter: dict[int, bytes] | None = None,
+        initial_filter: SeenFilter | None = None,
         max_iterations: int = 1000,
         on_iteration: "Callable[[int, DataFrame], None] | None" = None,
     ) -> CrawlResult:
@@ -299,25 +284,26 @@ class Crawler:
         seen_parts: list[DataFrame] = [seen0]
         seen = seen0
 
-        # Incremental Bloom over dedup_key: fold in each iteration's NEW
-        # rows only (merge_blooms), never rescan the whole seen set.
+        # Incremental seen-filter over dedup_key: fold in each iteration's
+        # NEW rows only, never rescan the whole seen set.
         # ``initial_filter`` (e.g. from expire_seen's incremental cuckoo
-        # delete) skips the full rebuild over initial_seen.
-        bloom: dict[int, bytes] | None = None
+        # delete) skips the full rebuild over initial_seen; it keeps its
+        # own kind and geometry — cfg's filter settings only shape a fresh
+        # filter.
+        seen_filter: SeenFilter | None = None
         if cfg.bloom_enabled:
             if initial_filter is not None:
-                bloom = initial_filter
-            elif initial_seen is not None:
-                bloom = self._build_filter(
-                    seen0.select(F.col("dedup_key").alias("url_hash")))
+                seen_filter = initial_filter
             else:
-                bloom = {}
+                seen_filter = SeenFilter.for_config(cfg)
+                if initial_seen is not None:
+                    seen_filter = seen_filter.build(seen0, key="dedup_key")
 
         # None -> mined from fetched robots bodies; a resumed run restores
         # the rules mined by its completed iterations (bit-identity)
         robots_rules = robots if robots is not None else initial_robots_rules
         BLOOM_FOLD_EVERY = 4
-        bloom_pending: list[DataFrame] = []
+        fold_pending: list[DataFrame] = []
         edges_parts: list[DataFrame] = []
         images_parts: list[DataFrame] = []
         errors_parts: list[DataFrame] = []
@@ -357,15 +343,10 @@ class Crawler:
             # sound. Ineligible rows (media-aborted F3, robots-denied)
             # ride through the politeness window flagged _elig=False:
             # they sort last, never take a budget slot, never select.
-            stale = None
-            for part in bloom_pending:
-                stale = part if stale is None else stale.unionByName(part)
             new = anti_join_seen(
-                cand, seen, key="dedup_key", bloom=bloom,
-                bloom_partitions=cfg.bloom_partitions,
-                bloom_bits=cfg.bloom_bits, bloom_hashes=cfg.bloom_hashes,
-                keys_unique=True, filter_kind=cfg.filter_kind,
-                stale_keys=stale,
+                cand, seen, key="dedup_key", seen_filter=seen_filter,
+                keys_unique=True,
+                stale_keys=_union(fold_pending) if fold_pending else None,
             ).withColumn("_media", U.is_media_col(F.col("url")))
             # robots enforcement (north rule, off by default). With no
             # rules table supplied, rules are mined from the robots.txt
@@ -619,22 +600,17 @@ class Crawler:
             if payload_errors_it is not None:
                 errors_it = errors_it.unionByName(payload_errors_it)
             errors_parts.append(errors_it)
-            if bloom is not None:
+            if seen_filter is not None:
                 # fold NEW keys into the filter every few iterations, not
                 # every one: the filter is a pre-prune only — keys not yet
                 # folded are still caught by the exact anti-join (staleness
                 # is safe, it just prunes less) — and each fold is a full
                 # job whose fixed overhead dominates small BFS waves.
-                bloom_pending.append(seen_it.select("dedup_key"))
-                if len(bloom_pending) >= BLOOM_FOLD_EVERY:
-                    inc_src = bloom_pending[0]
-                    for part in bloom_pending[1:]:
-                        inc_src = inc_src.unionByName(part)
-                    bloom = self._merge_filter(
-                        bloom,
-                        self._build_filter(inc_src.select(
-                            F.col("dedup_key").alias("url_hash"))))
-                    bloom_pending = []
+                fold_pending.append(seen_it.select("dedup_key"))
+                if len(fold_pending) >= BLOOM_FOLD_EVERY:
+                    seen_filter = seen_filter.build(
+                        _union(fold_pending), key="dedup_key")
+                    fold_pending = []
             m["t_frontier"] = round(time.perf_counter() - t0, 3)
 
             if self.store is not None:
@@ -665,12 +641,7 @@ class Crawler:
             it += 1
 
         def cat(parts, key):
-            if not parts:
-                return empty[key]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return _union(parts) if parts else empty[key]
 
         if last_bucket_table is not None:
             # the final seen reads only the LAST-written flip; the other
@@ -682,15 +653,11 @@ class Crawler:
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
             self._prev_bucket_tables = [last_bucket_table]
 
-        if bloom is not None and bloom_pending:
+        if seen_filter is not None and fold_pending:
             # fold the tail increments so the returned filter covers the
             # whole seen set (TTL re-crawl feeds it back via initial_filter)
-            inc_src = bloom_pending[0]
-            for part in bloom_pending[1:]:
-                inc_src = inc_src.unionByName(part)
-            bloom = self._merge_filter(
-                bloom, self._build_filter(
-                    inc_src.select(F.col("dedup_key").alias("url_hash"))))
+            seen_filter = seen_filter.build(
+                _union(fold_pending), key="dedup_key")
 
         return CrawlResult(
             edges=cat(edges_parts, "edges"),
@@ -699,7 +666,7 @@ class Crawler:
             errors=cat(errors_parts, "errors"),
             iterations=it - start_iteration,
             metrics=metrics,
-            seen_filter=bloom,
+            seen_filter=seen_filter,
         )
 
     def resume(
