@@ -112,6 +112,22 @@ def test_config_env_bad_filter_geometry_fails_fast(monkeypatch):
         CrawlConfig.from_yaml()
 
 
+@pytest.mark.parametrize("raw,want", [
+    (" On ", True), ("YES", True), ("1", True), ("true", True),
+    ("Off", False), (" no", False), ("0", False), ("FALSE", False),
+    ("ture", None), ("", None), ("2", None),
+])
+def test_config_env_bool_spellings(monkeypatch, raw, want):
+    """A boolean variable takes 1/true/yes/on or 0/false/no/off in any
+    case; a typo raises naming the variable instead of reading False."""
+    monkeypatch.setenv("XCRAWL3R_GLOBAL_DEDUP", raw)
+    if want is None:
+        with pytest.raises(ValueError, match="XCRAWL3R_GLOBAL_DEDUP"):
+            CrawlConfig.from_yaml()
+    else:
+        assert CrawlConfig.from_yaml().global_dedup is want
+
+
 def test_seeds_from_urls_blank_filter_and_stable_ids(spark):
     df = seeds_from_urls(spark, ["https://a.test/", "  ", "", "b.test"])
     rows = {r["url"]: r["seed_id"] for r in df.collect()}

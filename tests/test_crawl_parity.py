@@ -129,3 +129,71 @@ def test_crawl_ordering_bfs_wave_parity(spark, budget):
     sim, res = run_both(spark, cfg)
     engine = {(r["seed_id"], r["url"], r["depth"]) for r in res.seen.collect()}
     assert engine == sim.seen_depths
+
+
+# -- the loop's stop condition: observed counts, no frontier probe ---------
+
+def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
+    """The loop decides to go on from counts observed on its own
+    checkpoints (no isEmpty() job), and those counts are the per-wave
+    ``rows_*`` metrics: the seen rows sum to the seen set, and each
+    wave's rows_frontier_next is the size of the frontier it committed."""
+    from pyspark.sql import DataFrame
+
+    def no_probe(self):
+        raise AssertionError("crawl() probed a frame with isEmpty()")
+
+    monkeypatch.setattr(DataFrame, "isEmpty", no_probe)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3,
+                      parallelism=2, bloom_enabled=True,
+                      checkpoint_dir=str(tmp_path / "ckpt"))
+    pages = G.pages_dict(P)
+    seeds = [(r["seed_id"], r["url"]) for r in G.seeds_rows(P, 3)]
+    sim = simulate_crawl(seeds, pages, cfg)
+    crawler = Crawler(spark, cfg)
+    res = crawler.crawl(G.seeds_df(spark, P, 3),
+                        G.pages_df(spark, P, distributed=False))
+    assert seen_set(res) == sim.seen
+    assert edges_multiset(res) == Counter(sim.edges)
+
+    assert len(res.metrics) == res.iterations
+    assert sum(m["rows_seen"] for m in res.metrics) == res.seen.count()
+    assert any(m["rows_overflow"] for m in res.metrics)  # budget bit
+    for m in res.metrics:
+        committed = crawler.store.read_iteration("frontier", m["iter"])
+        assert m["rows_frontier_next"] == committed.count()
+        assert m["rows_new"] >= m["rows_seen"] + m["rows_overflow"]
+    assert res.metrics[-1]["rows_frontier_next"] == 0
+
+
+def test_out_of_scope_seeds_run_no_iteration(spark):
+    seeds = spark.createDataFrame(
+        [("s0", "https://elsewhere.example/p/0"), ("s1", "not a url")],
+        "seed_id string, url string")
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2)
+    res = Crawler(spark, cfg).crawl(
+        seeds, G.pages_df(spark, P, distributed=False))
+    assert res.iterations == 0 and res.metrics == []
+    assert res.seen.count() == 0 and res.edges.count() == 0
+
+
+def test_overflow_alone_keeps_the_loop_going(spark):
+    """depth=1 discovers no children, so after the first wave the frontier
+    is politeness overflow only: with a budget of one fetch per
+    (seed, host) per wave the crawl runs one wave per seed target, as
+    many as the busiest (seed, host) has in the simulator."""
+    from urllib.parse import urlsplit
+
+    from xcrawl3r_spark.functions.urls import is_media_url
+
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=1,
+                      parallelism=1, bloom_enabled=False)
+    sim, res = run_both(spark, cfg, n_seeds=2)
+    assert seen_set(res) == sim.seen
+    per_host = Counter((s, urlsplit(u).hostname)
+                       for s, u, d in sim.seen_depths
+                       if d == 1 and not is_media_url(u))
+    waves = max(per_host.values())
+    assert waves > 2
+    assert res.iterations == waves
+    assert [m["rows_overflow"] for m in res.metrics][-1] == 0

@@ -382,6 +382,9 @@ def test_payload_fetch_budget_defers_to_next_iteration(spark, http_site):
         assert len(by_iter) >= 3                            # spread out
         fetched_paths = [p for p, _ in _Handler.requests if p.startswith("/i/")]
         assert len(fetched_paths) == 5                      # exactly once
+        # deferred GETs count as overflow, not as seen, in the metrics
+        assert sum(m["rows_seen"] for m in res.metrics) == res.seen.count()
+        assert sum(m["rows_overflow"] for m in res.metrics) > 0
     finally:
         restore()
 

@@ -4,6 +4,8 @@ uninterrupted run (deterministic data plane: no wall clock, no RNG)."""
 
 from collections import Counter
 
+import pytest
+
 from xcrawl3r_spark.config import CrawlConfig
 from xcrawl3r_spark.plans.crawl import Crawler
 from xcrawl3r_spark.sources import datagen as G
@@ -22,6 +24,10 @@ def _edges_ms(df):
     return Counter(
         (r["seed_id"], r["src_url"], r["url"], r["kind"], r["depth"], r["iter"])
         for r in df.collect())
+
+
+def _rows(df):
+    return Counter(tuple(sorted(r.asDict().items())) for r in df.collect())
 
 
 def _seen_set(df):
@@ -101,6 +107,51 @@ def test_resume_restores_mined_robots_rules(spark, tmp_path):
     assert all(("private" not in u) for _, u, _d in res_seen)
     assert res_seen == full_seen
     assert _edges_ms(resumed.edges) == _edges_ms(full.edges)
+
+
+def test_commit_wave_crash_leaves_frontier_unpublished(
+        spark, tmp_path, monkeypatch):
+    """A wave's parts are written concurrently and the frontier manifest
+    is published last: when one part's write fails, the parts that
+    finished are committed, the frontier (resume's key) is not, and the
+    re-run writes only what is missing — the resumed output equals an
+    uninterrupted run."""
+    from xcrawl3r_spark.sinks.tables import SnapshotStore
+
+    seeds = G.seeds_df(spark, P, 2)
+    pages = G.pages_df(spark, P, distributed=False)
+    full = Crawler(spark, _cfg()).crawl(seeds, pages)
+
+    write = SnapshotStore._write_data
+    written = []
+
+    def failing_edges(self, df, table, iteration):
+        if (table, iteration) == ("edges", 2):
+            raise OSError("edges write failed")
+        return write(self, df, table, iteration)
+
+    def recording(self, df, table, iteration):
+        written.append((table, iteration))
+        return write(self, df, table, iteration)
+
+    ckpt = tmp_path / "ckpt"
+    c1 = Crawler(spark, _cfg(ckpt))
+    monkeypatch.setattr(SnapshotStore, "_write_data", failing_edges)
+    with pytest.raises(OSError, match="edges write failed"):
+        c1.crawl(seeds, pages)
+    assert c1.store.last_iteration("frontier") == 1
+    assert c1.store.last_iteration("edges") == 1
+    for table in ("seen", "images", "errors"):
+        assert c1.store.last_iteration(table) == 2
+
+    monkeypatch.setattr(SnapshotStore, "_write_data", recording)
+    resumed = Crawler(spark, _cfg(ckpt)).resume(seeds, pages)
+    assert sorted(t for t, i in written if i == 2) == ["edges", "frontier"]
+    assert _edges_ms(resumed.edges) == _edges_ms(full.edges)
+    assert _seen_set(resumed.seen) == _seen_set(full.seen)
+    for part in ("images", "errors"):
+        assert _rows(getattr(resumed, part)) == _rows(getattr(full, part))
+    assert resumed.iterations == full.iterations
 
 
 def test_commit_idempotent(spark, tmp_path):

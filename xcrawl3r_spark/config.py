@@ -21,6 +21,11 @@ CONFIG_VERSION = "1.2.0"
 RETIRED_KEYS = frozenset({"iceberg_catalog", "iceberg_namespace",
                           "shuffle_partitions"})
 
+#: spellings a boolean XCRAWL3R_* variable accepts (case-insensitive);
+#: any other value raises rather than silently reading as False
+_ENV_TRUE = ("1", "true", "yes", "on")
+_ENV_FALSE = ("0", "false", "no", "off")
+
 
 @dataclass
 class CrawlConfig:
@@ -199,7 +204,8 @@ class CrawlConfig:
         viper(YAML+env)+flags stack (internal/configuration/
         configuration.go:15-32, cmd/xcrawl3r/main.go:130-163).
 
-        Env values parse by field type: bools accept true/1/yes, lists
+        Env values parse by field type: bools accept 1/true/yes/on and
+        0/false/no/off (any case; anything else raises), lists
         split on commas. Unknown YAML keys error (typo safety).
         """
         import os as _os
@@ -229,7 +235,12 @@ class CrawlConfig:
             if "list" in t:
                 merged[name] = [x.strip() for x in raw.split(",") if x.strip()]
             elif "bool" in t:
-                merged[name] = raw.strip().lower() in ("1", "true", "yes", "on")
+                word = raw.strip().lower()
+                if word not in _ENV_TRUE + _ENV_FALSE:
+                    raise ValueError(
+                        f"XCRAWL3R_{name.upper()}={raw!r}: expected one of "
+                        f"{'/'.join(_ENV_TRUE)} or {'/'.join(_ENV_FALSE)}")
+                merged[name] = word in _ENV_TRUE
             elif "int" in t:
                 merged[name] = int(raw)
             else:

@@ -18,21 +18,28 @@ Per-iteration dataflow (SURVEY §3.4):
       --(scope rlike)--> edges append (emit-per-occurrence)          F1/D3
       frontier[i+1] = extracted ∪ overflow, depth-gated              A4
 
-All loop state is localCheckpoint()-ed each iteration (breaks Catalyst
-lineage growth); with ``cfg.checkpoint_dir`` every iteration also commits
-frontier/seen/edges/images/errors snapshots through SnapshotStore, and
-``Crawler.resume()`` continues bit-identically from the last commit
-(deterministic data plane: no wall clock, no RNG).
+Each iteration localCheckpoint()s its two wide frames, ``flagged`` and
+``extracted`` (breaks Catalyst lineage growth); everything else is a
+cheap lazy filter over them. The loop runs no job of its own to decide
+whether to go on: Observations on those checkpoints count the next
+frontier's rows (children within the depth limit + requeued overflow)
+while the checkpoint jobs run, and the same counts fill the ``rows_*``
+keys of ``CrawlResult.metrics``. With ``cfg.checkpoint_dir`` every
+iteration also commits frontier/seen/edges/images/errors snapshots
+through ``SnapshotStore.commit_wave`` (concurrent writes, frontier
+manifest last); the committed frontier, read back, IS the next
+iteration's input, and ``Crawler.resume()`` continues bit-identically
+from the last commit (deterministic data plane: no wall clock, no RNG).
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from xcrawl3r_spark.config import CrawlConfig
@@ -49,6 +56,19 @@ from xcrawl3r_spark.sinks.tables import SnapshotStore, write_bucketed
 
 FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
                  "disc_iter", "src_url"]
+#: a committed frontier is read back with this schema: no footer-inference
+#: job, and snapshots from before the src_url column read it as NULL
+FRONTIER_SCHEMA = ("seed_id string, url string, url_hash bigint, "
+                   "dedup_key bigint, host string, depth int, disc_iter int, "
+                   "src_url string")
+#: result schemas of a crawl that ran no iteration
+EMPTY_SCHEMAS = {
+    "edges": "seed_id string, src_url string, url string, kind string, "
+             "depth int, iter int",
+    "images": "seed_id string, url string, iter int",
+    "errors": "seed_id string, url string, error string, stage string, "
+              "iter int",
+}
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -61,6 +81,21 @@ def _ckpt(df: DataFrame) -> DataFrame:
     writer count — on a real cluster this is also the level that survives
     executor memory pressure without recompute storms."""
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+def _ckpt_counts(df: DataFrame, **conds: F.Column) -> tuple[DataFrame, dict]:
+    """``_ckpt`` plus ``{name: count_if(cond)}`` over the checkpointed
+    rows, observed while the checkpoint job runs — no job of its own."""
+    obs = Observation()
+    out = _ckpt(df.observe(
+        obs, *[F.count_if(c).alias(k) for k, c in conds.items()]))
+    return out, obs.get
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """A zero-partition frame: unions and joins over it launch no task
+    (``createDataFrame([])`` parallelizes through Python workers)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
 def _union(parts: list[DataFrame]) -> DataFrame:
@@ -77,13 +112,30 @@ class CrawlResult:
     images: DataFrame   # seed_id, url, iter
     errors: DataFrame   # seed_id, url, error, stage, iter
     iterations: int = 0
-    #: per-iteration wall-clock phase timings + row counts (A6 metrics)
+    #: per-iteration phase timings (``t_*``, wall-clock seconds) and row
+    #: counts: ``rows_new`` (unseen candidates), ``rows_seen`` (marked
+    #: seen), ``rows_overflow`` (requeued by a politeness budget, pages and
+    #: live image GETs), ``rows_extracted`` (in-scope emits + visits) and
+    #: ``rows_frontier_next`` (the next iteration's frontier)
     metrics: list[dict] = field(default_factory=list)
-    #: the final probabilistic seen-filter (all seen keys folded), or None
-    #: with bloom_enabled off. Self-describing: it carries its kind and
-    #: geometry, so expire_seen()/crawl(initial_filter=...) on any Crawler
-    #: probe and extend it with the geometry that built it
-    seen_filter: SeenFilter | None = None
+    #: the seen-filter as last folded in the loop, and the seen-key
+    #: increments not folded into it yet (see ``seen_filter``)
+    _filter: SeenFilter | None = field(default=None, repr=False)
+    _filter_pending: list[DataFrame] = field(default_factory=list, repr=False)
+
+    @property
+    def seen_filter(self) -> SeenFilter | None:
+        """The final probabilistic seen-filter (all seen keys folded), or
+        None with bloom_enabled off. Self-describing: it carries its kind
+        and geometry, so expire_seen()/crawl(initial_filter=...) on any
+        Crawler probe and extend it with the geometry that built it. The
+        loop's last few increments are folded on first read, once — a
+        caller that never reads the filter never pays for the fold."""
+        if self._filter is not None and self._filter_pending:
+            self._filter = self._filter.build(
+                _union(self._filter_pending), key="dedup_key")
+            self._filter_pending = []
+        return self._filter
 
 
 class Crawler:
@@ -152,10 +204,12 @@ class Crawler:
         pandas UDF; expansion is native explode (no driver loop — seed
         lists can be arbitrarily large)."""
         canon = U.canonicalize_udf()
+        # uncanonicalizable seeds (NULL) explode to NULL targets, dropped
+        # below: a NULL filter right after the UDF would be pushed below
+        # its projection and run the UDF twice
         base = (
             seeds.filter(F.length(F.trim("url")) > 0)          # F5
             .withColumn("url", canon("url"))
-            .filter(F.col("url").isNotNull())
         )
         scheme = F.substring_index("url", "://", 1)
         # netloc incl. port (Go's url.Host keeps the port; parse_url HOST
@@ -176,6 +230,7 @@ class Crawler:
             targets = F.concat(targets, expansions)
         exploded = (
             base.select("seed_id", F.explode(targets).alias("url"))
+            .filter(F.col("url").isNotNull())
             .withColumn("depth", F.lit(1))
             .withColumn("disc_iter", F.lit(0))
             # seeds have no discovering page -> no Referer for them
@@ -245,15 +300,12 @@ class Crawler:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
         self._prev_bucket_tables = []
         last_bucket_table: str | None = None
-        scope = cfg.scope_pattern()
-        empty = {
-            "edges": spark.createDataFrame(
-                [], "seed_id string, src_url string, url string, kind string, "
-                    "depth int, iter int"),
-            "images": spark.createDataFrame([], "seed_id string, url string, iter int"),
-            "errors": spark.createDataFrame(
-                [], "seed_id string, url string, error string, stage string, iter int"),
-        }
+        # URL-class columns, built once per crawl rather than once per
+        # wave: each builder is a chain of driver->JVM calls
+        url = F.col("url")
+        in_scope = url.rlike(cfg.scope_pattern())
+        is_media, is_image = U.is_media_col(url), U.is_image_col(url)
+        is_file = U.is_file_col(url)
         seen_schema = ", ".join(f"{c} {t}" for c, t in [
             ("seed_id", "string"), ("url", "string"), ("url_hash", "long"),
             ("dedup_key", "long"), ("host", "string"), ("depth", "int"),
@@ -269,13 +321,12 @@ class Crawler:
         else:
             # seeds pass through the same scope gate as everything else
             # (colly URLFilters applies to seed visits too, xcrawl3r.go:273)
-            frontier = self.seed_frontier(seeds).filter(F.col("url").rlike(scope))
-        frontier = _ckpt(self._priority_buckets(frontier))
-        seen0 = _ckpt(
-            initial_seen
-            if initial_seen is not None
-            else spark.createDataFrame([], seen_schema)
-        )
+            frontier = self.seed_frontier(seeds).filter(in_scope)
+        frontier, counted = _ckpt_counts(
+            self._priority_buckets(frontier), rows=F.lit(True))
+        frontier_rows = counted["rows"]
+        seen0 = (_ckpt(initial_seen) if initial_seen is not None
+                 else _empty(spark, seen_schema))
 
         # seen = lazy union of per-iteration increments (each a cheap filter
         # over a checkpointed parent); collapsed every SEEN_COLLAPSE_EVERY
@@ -318,7 +369,7 @@ class Crawler:
         )
         it = start_iteration
 
-        while it <= max_iterations and not frontier.isEmpty():
+        while it <= max_iterations and frontier_rows > 0:
             m: dict = {"iter": it}
             t0 = time.perf_counter()
             # (1) within-batch dedup at min depth (FIFO-first-visit parity).
@@ -347,7 +398,7 @@ class Crawler:
                 cand, seen, key="dedup_key", seen_filter=seen_filter,
                 keys_unique=True,
                 stale_keys=_union(fold_pending) if fold_pending else None,
-            ).withColumn("_media", U.is_media_col(F.col("url")))
+            ).withColumn("_media", is_media)
             # robots enforcement (north rule, off by default). With no
             # rules table supplied, rules are mined from the robots.txt
             # bodies the crawl itself fetches (seed expansion E5 fetches
@@ -360,11 +411,15 @@ class Crawler:
                 new = new.withColumn("_robots_ok", F.lit(True))
             elig = ~F.col("_media") & F.col("_robots_ok")
             if cfg.parallelism > 0:
-                flagged = _ckpt(politeness_flag(
-                    new, cfg.parallelism, cfg.skew_salt, eligible=elig))
+                flagged = politeness_flag(
+                    new, cfg.parallelism, cfg.skew_salt, eligible=elig)
             else:
-                flagged = _ckpt(new.withColumn("_elig", elig)
-                                .withColumn("_sel", elig))
+                flagged = new.withColumn("_elig", elig).withColumn("_sel", elig)
+            flagged, counted = _ckpt_counts(
+                flagged, rows_new=F.lit(True),
+                rows_seen=F.col("_sel") | F.col("_media"),
+                rows_overflow=F.col("_elig") & ~F.col("_sel"))
+            m.update(counted)
             FLAGS = ["_media", "_robots_ok", "_elig", "_sel"]
             media = flagged.filter("_media").drop(*FLAGS)
             selected = flagged.filter("_sel").drop(*FLAGS)
@@ -385,7 +440,7 @@ class Crawler:
                     F.col("_media") & F.col("_robots_ok")).drop(*FLAGS)
                 payload_errors_it = (
                     flagged.filter(F.col("_media") & ~F.col("_robots_ok"))
-                    .filter(U.is_image_col(F.col("url")))
+                    .filter(is_image)
                     .select("seed_id", "url",
                             F.lit("robots denied").alias("error"),
                             F.lit("payload").alias("stage"),
@@ -399,14 +454,18 @@ class Crawler:
             # deferred rows re-enter the media branch and fetch later.
             # Only image rows compete for slots — non-image media are
             # never fetched, so they'd waste budget and delay for nothing.
-            img_rows = media_fetchable.filter(U.is_image_col(F.col("url")))
+            # The ranking is checkpointed once (the fetch, the seen
+            # marking and the requeue all read it) and counts the
+            # deferred rows for the frontier size.
+            img_rows = media_fetchable.filter(is_image)
             if live_payloads and cfg.parallelism > 0:
-                from xcrawl3r_spark.operators.politeness import (
-                    politeness_select,
-                )
-
-                img_rows, media_overflow = politeness_select(
-                    img_rows, cfg.parallelism, cfg.skew_salt)
+                ranked, counted = _ckpt_counts(
+                    politeness_flag(img_rows, cfg.parallelism, cfg.skew_salt),
+                    deferred=~F.col("_sel"))
+                img_rows = ranked.filter("_sel").drop("_sel")
+                media_overflow = ranked.filter(~F.col("_sel")).drop("_sel")
+                m["rows_overflow"] += counted["deferred"]
+                m["rows_seen"] -= counted["deferred"]
             images_it = img_rows.select(
                 "seed_id", "url", F.lit(it).alias("iter"),
                 F.col("src_url"))
@@ -482,8 +541,11 @@ class Crawler:
                 .withColumn("iter", F.lit(it))
             )
             if media_overflow is not None:
+                # on dedup_key (unique per row): with per-seed dedup, one
+                # seed's copy of an image may fetch while another's defers
                 seen_it = seen_it.join(
-                    media_overflow.select("url"), "url", "left_anti")
+                    media_overflow.select("dedup_key"), "dedup_key", "left_anti"
+                ).select(*seen_it.columns)
             m["t_new"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             # (7) fetch: either the real Arrow-batched HTTP stage
@@ -517,7 +579,7 @@ class Crawler:
                         F.lit("fetch").alias("stage"), F.lit(it).alias("iter"))
             )
             ok = fetched.filter(F.col("body").isNotNull() & (F.col("status") == 200))
-            ok = ok.withColumn("is_file", U.is_file_col(F.col("url")))
+            ok = ok.withColumn("is_file", is_file)
             mined_inc: DataFrame | None = None
             if cfg.obey_robots and robots is None:
                 # rules table stays tiny (one row per host with a fetched
@@ -534,8 +596,15 @@ class Crawler:
                     else collapse_robots_rules(
                         robots_rules.unionByName(mined_inc)))
             # (8) extraction (Arrow-batched) + scope filter on emits/visits
-            extracted = extract_links(ok).filter(F.col("url").rlike(scope))
-            extracted = _ckpt(extracted)
+            # children within the depth limit (A4) enter the next frontier
+            in_depth = (F.col("depth") + 1 <= cfg.depth if cfg.depth > 0
+                        else F.lit(True))
+            extracted, counted = _ckpt_counts(
+                extract_links(ok).filter(in_scope),
+                rows_extracted=F.lit(True), children=in_depth)
+            m["rows_extracted"] = counted["rows_extracted"]
+            m["rows_frontier_next"] = counted["children"] + m["rows_overflow"]
+            frontier_rows = m["rows_frontier_next"]
             m["t_fetch_extract"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             edges_it = (
@@ -544,14 +613,12 @@ class Crawler:
             )
             # (9) next frontier: children at depth+1, depth-gated (A4),
             # plus politeness overflow (same depth, just delayed)
-            child = extracted.select(
+            child = extracted.filter(in_depth).select(
                 "seed_id", F.col("url"), (F.col("depth") + 1).alias("depth"),
                 # the discovering page -> next fetch's Referer
                 # (extensions.Referer, xcrawl3r.go:307)
                 F.col("src_url"),
             ).withColumn("disc_iter", F.lit(it))
-            if cfg.depth > 0:
-                child = child.filter(F.col("depth") <= cfg.depth)
             frontier_next = self._with_keys(child).select(*FRONTIER_COLS)
             requeue = overflow.select(*FRONTIER_COLS)
             if media_overflow is not None:
@@ -565,11 +632,12 @@ class Crawler:
             # The frontier is a cheap bounded-depth transform over this
             # iteration's ALREADY-checkpointed extracted/flagged frames, so
             # its own checkpoint buys no lineage truncation — only a
-            # per-iteration materialization job (~20% of loop jobs; fixed
-            # job overhead dominates small BFS waves). Materialize it only
-            # when a snapshot store commits it anyway (the commit is the
-            # materialization) or when range-bucketing wants layout.
-            if self.store is not None or cfg.frontier_range_partitions:
+            # per-iteration materialization job (fixed job overhead
+            # dominates small BFS waves). With a snapshot store the commit
+            # below materializes it and the next iteration reads the
+            # committed snapshot; without one it stays lazy, unless
+            # range-bucketing wants the layout.
+            if self.store is None and cfg.frontier_range_partitions:
                 frontier = _ckpt(frontier)
 
             # edges/images/errors parts stay LAZY: they are cheap filters
@@ -615,17 +683,17 @@ class Crawler:
 
             if self.store is not None:
                 t0 = time.perf_counter()
-                self.store.commit(seen_it, "seen", it)
-                self.store.commit(edges_parts[-1], "edges", it)
-                self.store.commit(images_parts[-1], "images", it)
-                self.store.commit(errors_parts[-1], "errors", it)
+                parts = {"seen": seen_it, "edges": edges_it,
+                         "images": images_it, "errors": errors_it}
                 if mined_inc is not None:
-                    # committed BEFORE frontier: resume() keys off the
-                    # frontier's last commit, so rules for any resumable
-                    # iteration must already be durable (crash between the
-                    # two leaves an orphan rules commit, which upto= drops)
-                    self.store.commit(mined_inc, "robots_rules", it)
-                self.store.commit(frontier, "frontier", it)
+                    parts["robots_rules"] = mined_inc
+                # frontier last: resume() keys off its commit, so the rules
+                # and rows of any resumable iteration are durable first
+                # (a crash in between leaves orphan commits upto= drops)
+                parts["frontier"] = frontier
+                self.store.commit_wave(parts, it)
+                frontier = self.store.read_iteration(
+                    "frontier", it, schema=FRONTIER_SCHEMA)
                 m["t_store"] = round(time.perf_counter() - t0, 3)
             if on_iteration is not None:
                 # as-discovered streaming hook (the reference's consumer
@@ -641,7 +709,7 @@ class Crawler:
             it += 1
 
         def cat(parts, key):
-            return _union(parts) if parts else empty[key]
+            return _union(parts) if parts else _empty(spark, EMPTY_SCHEMAS[key])
 
         if last_bucket_table is not None:
             # the final seen reads only the LAST-written flip; the other
@@ -653,12 +721,6 @@ class Crawler:
                     spark.sql(f"DROP TABLE IF EXISTS {t}")
             self._prev_bucket_tables = [last_bucket_table]
 
-        if seen_filter is not None and fold_pending:
-            # fold the tail increments so the returned filter covers the
-            # whole seen set (TTL re-crawl feeds it back via initial_filter)
-            seen_filter = seen_filter.build(
-                _union(fold_pending), key="dedup_key")
-
         return CrawlResult(
             edges=cat(edges_parts, "edges"),
             seen=seen,
@@ -666,7 +728,8 @@ class Crawler:
             errors=cat(errors_parts, "errors"),
             iterations=it - start_iteration,
             metrics=metrics,
-            seen_filter=seen_filter,
+            _filter=seen_filter,
+            _filter_pending=fold_pending,
         )
 
     def resume(
@@ -685,7 +748,8 @@ class Crawler:
         if last is None:
             return self.crawl(seeds, pages, robots, image_payloads,
                               on_iteration=on_iteration)
-        frontier = self.store.read_iteration("frontier", last)
+        frontier = self.store.read_iteration(
+            "frontier", last, schema=FRONTIER_SCHEMA)
         seen = self.store.read("seen", upto=last)
         # Restore robots rules mined by completed iterations: without this
         # an obey_robots run with mined (not supplied) rules would resume
@@ -710,12 +774,11 @@ class Crawler:
         edges = self.store.read("edges")
         images = self.store.read("images")
         errors = self.store.read("errors")
-        return CrawlResult(
+        # the tail's seen-filter passes through unfolded
+        return replace(
+            res,
             edges=edges if edges is not None else res.edges,
-            seen=res.seen,
             images=images if images is not None else res.images,
             errors=errors if errors is not None else res.errors,
             iterations=res.iterations + last,
-            metrics=res.metrics,
-            seen_filter=res.seen_filter,
         )
