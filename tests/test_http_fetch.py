@@ -389,6 +389,37 @@ def test_payload_fetch_budget_defers_to_next_iteration(spark, http_site):
         restore()
 
 
+def test_payload_deferral_keeps_other_seeds_copy_seen(spark, http_site):
+    """Per-seed dedup: when one seed's GET of an image is deferred by the
+    payload budget, another seed's fetched copy of the same URL is still
+    marked seen (the deferral is per row, not per URL)."""
+    from pyspark.sql import functions as F
+
+    restore, _ = _png_route()
+    try:
+        urls = [f"{http_site}/i/n{i}.png" for i in range(4)]
+        # s1 may fetch one image per wave, lowest url_hash first: the
+        # highest-hash image is deferred for s1 while s0 fetches it
+        ranked = spark.createDataFrame([(u,) for u in urls], "url string") \
+            .orderBy(F.xxhash64("url")).collect()
+        shared = ranked[-1]["url"]
+        _Handler.site = {
+            "/p/a": ("text/html", f'<img src="{shared}">', 200),
+            "/p/b": ("text/html", "".join(f'<img src="{u}">' for u in urls),
+                     200),
+        }
+        seeds = spark.createDataFrame(
+            [("s0", f"{http_site}/p/a"), ("s1", f"{http_site}/p/b")],
+            "seed_id string, url string")
+        res = Crawler(spark, _cfg(parallelism=1)).crawl(seeds)
+        seen = {(r["seed_id"], r["url"]) for r in res.seen.collect()}
+        assert ("s0", shared) in seen
+        assert {("s1", u) for u in urls} <= seen
+        assert sum(m["rows_seen"] for m in res.metrics) == len(seen)
+    finally:
+        restore()
+
+
 def test_payload_over_cap_gets_own_error_string(spark, http_site):
     """cfg.max_payload_bytes truncation is classified by the transport's
     explicit outcome marker, not inferred from null-patterns: the row

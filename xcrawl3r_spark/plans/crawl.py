@@ -27,8 +27,7 @@ while the checkpoint jobs run, and the same counts fill the ``rows_*``
 keys of ``CrawlResult.metrics``. With ``cfg.checkpoint_dir`` every
 iteration also commits frontier/seen/edges/images/errors snapshots
 through ``SnapshotStore.commit_wave`` (concurrent writes, frontier
-manifest last); the committed frontier, read back, IS the next
-iteration's input, and ``Crawler.resume()`` continues bit-identically
+manifest last), and ``Crawler.resume()`` continues bit-identically
 from the last commit (deterministic data plane: no wall clock, no RNG).
 """
 
@@ -56,7 +55,7 @@ from xcrawl3r_spark.sinks.tables import SnapshotStore, write_bucketed
 
 FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
                  "disc_iter", "src_url"]
-#: a committed frontier is read back with this schema: no footer-inference
+#: resume() reads a committed frontier with this schema: no footer-inference
 #: job, and snapshots from before the src_url column read it as NULL
 FRONTIER_SCHEMA = ("seed_id string, url string, url_hash bigint, "
                    "dedup_key bigint, host string, depth int, disc_iter int, "
@@ -633,11 +632,15 @@ class Crawler:
             # iteration's ALREADY-checkpointed extracted/flagged frames, so
             # its own checkpoint buys no lineage truncation — only a
             # per-iteration materialization job (fixed job overhead
-            # dominates small BFS waves). With a snapshot store the commit
-            # below materializes it and the next iteration reads the
-            # committed snapshot; without one it stays lazy, unless
-            # range-bucketing wants the layout.
-            if self.store is None and cfg.frontier_range_partitions:
+            # dominates small BFS waves). It stays lazy — the store commit
+            # writes it from those checkpoints — unless range-bucketing
+            # wants the layout (a lazy range exchange would re-sample in
+            # the commit and again in the next iteration). Reading the
+            # committed snapshot back instead would hand the planner the
+            # parquet files' tiny size estimates: the next fetch join then
+            # broadcasts the selected batch and streams the whole pages
+            # table (measured: more tasks, shuffle bytes and files).
+            if cfg.frontier_range_partitions:
                 frontier = _ckpt(frontier)
 
             # edges/images/errors parts stay LAZY: they are cheap filters
@@ -692,8 +695,6 @@ class Crawler:
                 # (a crash in between leaves orphan commits upto= drops)
                 parts["frontier"] = frontier
                 self.store.commit_wave(parts, it)
-                frontier = self.store.read_iteration(
-                    "frontier", it, schema=FRONTIER_SCHEMA)
                 m["t_store"] = round(time.perf_counter() - t0, 3)
             if on_iteration is not None:
                 # as-discovered streaming hook (the reference's consumer
