@@ -159,10 +159,10 @@ def test_commit_idempotent(spark, tmp_path):
 
     store = SnapshotStore(spark, str(tmp_path / "s"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    store.commit(df, "t", 1)
-    store.commit(df, "t", 1)  # duplicate commit ignored
+    store.commit_wave({"t": df}, 1)
+    store.commit_wave({"t": df}, 1)  # duplicate commit ignored
     assert store.read("t").count() == 2
-    store.commit(df, "t", 2)
+    store.commit_wave({"t": df}, 2)
     assert store.read("t").count() == 4
     assert store.read("t", upto=1).count() == 2
     assert store.last_iteration("t") == 2

@@ -53,13 +53,13 @@ from xcrawl3r_spark.operators.politeness import (
 )
 from xcrawl3r_spark.sinks.tables import SnapshotStore, write_bucketed
 
-FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
-                 "disc_iter", "src_url"]
-#: resume() reads a committed frontier with this schema: no footer-inference
-#: job, and snapshots from before the src_url column read it as NULL
+#: the frontier's columns. resume() reads a committed frontier with this
+#: schema: no footer-inference job, and snapshots from before the src_url
+#: column read it as NULL
 FRONTIER_SCHEMA = ("seed_id string, url string, url_hash bigint, "
                    "dedup_key bigint, host string, depth int, disc_iter int, "
                    "src_url string")
+FRONTIER_COLS = [c.split()[0] for c in FRONTIER_SCHEMA.split(", ")]
 #: result schemas of a crawl that ran no iteration
 EMPTY_SCHEMAS = {
     "edges": "seed_id string, src_url string, url string, kind string, "
@@ -179,6 +179,14 @@ class Crawler:
         )
 
     # -- A5: range-partitioned priority buckets --------------------------
+    def _range_buckets(self) -> int:
+        """The frontier's range-bucket count: ``frontier_range_partitions``,
+        None = spark.sql.shuffle.partitions, 0 = off."""
+        nb = self.cfg.frontier_range_partitions
+        if nb is None:
+            nb = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return nb
+
     def _priority_buckets(self, frontier: DataFrame) -> DataFrame:
         """Materialize the frontier as range-partitioned priority buckets
         (north rule): total order (depth, disc_iter, host_rank, url_hash)
@@ -186,9 +194,7 @@ class Crawler:
         Range partitioning bounds every bucket's size at 10^10-frontier
         scale (no hash-bucket can absorb a hot key range) and gives the
         checkpointed layout priority locality; 0 buckets = off."""
-        nb = self.cfg.frontier_range_partitions
-        if nb is None:
-            nb = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        nb = self._range_buckets()
         if not nb:
             return frontier
         host_rank = F.pmod(F.xxhash64("host"), F.lit(1000))
@@ -423,6 +429,10 @@ class Crawler:
             media = flagged.filter("_media").drop(*FLAGS)
             selected = flagged.filter("_sel").drop(*FLAGS)
             overflow = flagged.filter(F.col("_elig") & ~F.col("_sel")).drop(*FLAGS)
+            # requeued rows (same depth, just delayed) with their observed
+            # counts: each piece joins the next frontier AND its row count,
+            # which decides whether the loop goes on
+            requeue = [(overflow, counted["rows_overflow"])]
             payload_errors_it: DataFrame | None = None
             media_overflow: DataFrame | None = None
             live_payloads = (
@@ -463,7 +473,9 @@ class Crawler:
                     deferred=~F.col("_sel"))
                 img_rows = ranked.filter("_sel").drop("_sel")
                 media_overflow = ranked.filter(~F.col("_sel")).drop("_sel")
-                m["rows_overflow"] += counted["deferred"]
+                # payload-budget-deferred media re-enter unchanged (same
+                # depth — delay, not drop; they are NOT marked seen)
+                requeue.append((media_overflow, counted["deferred"]))
                 m["rows_seen"] -= counted["deferred"]
             images_it = img_rows.select(
                 "seed_id", "url", F.lit(it).alias("iter"),
@@ -602,8 +614,6 @@ class Crawler:
                 extract_links(ok).filter(in_scope),
                 rows_extracted=F.lit(True), children=in_depth)
             m["rows_extracted"] = counted["rows_extracted"]
-            m["rows_frontier_next"] = counted["children"] + m["rows_overflow"]
-            frontier_rows = m["rows_frontier_next"]
             m["t_fetch_extract"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             edges_it = (
@@ -611,23 +621,19 @@ class Crawler:
                 .withColumn("iter", F.lit(it))
             )
             # (9) next frontier: children at depth+1, depth-gated (A4),
-            # plus politeness overflow (same depth, just delayed)
+            # plus the requeued overflow
             child = extracted.filter(in_depth).select(
                 "seed_id", F.col("url"), (F.col("depth") + 1).alias("depth"),
                 # the discovering page -> next fetch's Referer
                 # (extensions.Referer, xcrawl3r.go:307)
                 F.col("src_url"),
             ).withColumn("disc_iter", F.lit(it))
-            frontier_next = self._with_keys(child).select(*FRONTIER_COLS)
-            requeue = overflow.select(*FRONTIER_COLS)
-            if media_overflow is not None:
-                # payload-budget-deferred media re-enter unchanged (same
-                # depth — delay, not drop; they were NOT marked seen)
-                requeue = requeue.unionByName(
-                    media_overflow.select(*FRONTIER_COLS))
+            pieces = [(self._with_keys(child), counted["children"])] + requeue
             frontier = self._priority_buckets(
-                frontier_next.unionByName(requeue)
-            )
+                _union([df.select(*FRONTIER_COLS) for df, _ in pieces]))
+            m["rows_overflow"] = sum(n for _, n in requeue)
+            m["rows_frontier_next"] = sum(n for _, n in pieces)
+            frontier_rows = m["rows_frontier_next"]
             # The frontier is a cheap bounded-depth transform over this
             # iteration's ALREADY-checkpointed extracted/flagged frames, so
             # its own checkpoint buys no lineage truncation — only a
@@ -640,7 +646,7 @@ class Crawler:
             # parquet files' tiny size estimates: the next fetch join then
             # broadcasts the selected batch and streams the whole pages
             # table (measured: more tasks, shuffle bytes and files).
-            if cfg.frontier_range_partitions:
+            if self._range_buckets():
                 frontier = _ckpt(frontier)
 
             # edges/images/errors parts stay LAZY: they are cheap filters

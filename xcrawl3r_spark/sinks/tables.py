@@ -62,33 +62,26 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(data_dir)
         return data_dir
 
-    def _publish(self, table: str, iteration: int, data_dir: str,
-                 meta: dict | None = None) -> None:
+    def _publish(self, table: str, iteration: int, data_dir: str) -> None:
         m = self.manifest(table)
-        m["commits"].append({"iter": iteration, "path": data_dir, "meta": meta or {}})
+        m["commits"].append({"iter": iteration, "path": data_dir, "meta": {}})
         tmp = self._manifest_path(table) + ".tmp"
         os.makedirs(self._tdir(table), exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(m, f, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path(table))
 
-    def commit(self, df: DataFrame, table: str, iteration: int, meta: dict | None = None) -> None:
-        """Atomically append one iteration's rows as a new snapshot."""
-        if self._committed(table, iteration):
-            return  # already committed (resume re-ran the iteration)
-        self._publish(table, iteration, self._write_data(df, table, iteration), meta)
-
     def commit_wave(self, parts: dict[str, DataFrame], iteration: int) -> None:
-        """Commit one iteration of several tables: every data directory is
-        written concurrently (one Spark job each, sharing the cluster),
-        then the manifests are published in ``parts`` order.
+        """Atomically append one iteration's rows of several tables as new
+        snapshots: every data directory is written concurrently (one Spark
+        job each, sharing the cluster), then the manifests are published
+        in ``parts`` order. A table that already has a commit for the
+        iteration is skipped (resume re-ran the iteration).
 
         The LAST part is the resume key (the crawl's frontier): it is
         published only when every part was written, so the parts before
         it are durable before ``resume()`` can key off it. A failed write
-        still publishes the other finished parts, then re-raises; a re-run
-        of the iteration skips every table already committed, as
-        ``commit`` does.
+        still publishes the other finished parts, then re-raises.
         """
         todo = {t: df for t, df in parts.items()
                 if not self._committed(t, iteration)}
