@@ -13,7 +13,7 @@ Scaling evidence (BASELINE north rule, N -> 4N executors stood in by
 N vs 4N taskset-pinned cores, default local[2] vs local[8]):
 ``python bench.py --scaling`` runs the SAME frontier-replay job (one full
 engine iteration over a ~1.3M-row frontier: within-batch dedup ->
-Bloom+anti-join vs seen -> fetch join -> Arrow extraction ->
+exact anti-join vs seen -> fetch join -> Arrow extraction ->
 next-frontier build) at both parallelism levels on the same input — each
 in a subprocess pinned with ``taskset`` so N cores means N cores — and
 reports URLs/sec at each plus efficiency = (T_N / T_4N) / 4, writing
@@ -492,7 +492,7 @@ def _write_baseline_md(result: dict) -> None:
 BASELINE.json north_rule): the engine's per-iteration pipeline run as one
 frontier replay — a 2x-duplicated frontier of every URL of a deterministic
 synthetic web graph (hosts={REPLAY_HOSTS}, pages/host={REPLAY_PAGES},
-seed=42) pushed through within-batch dedup -> Bloom + anti-join vs the
+seed=42) pushed through within-batch dedup -> exact anti-join vs the
 URL-seen set -> politeness -> fetch join -> Arrow-batched link extraction
 -> next-frontier build. Same input, same plan, at N={nc} and 4N={n4}
 cores. Each configuration runs in its own process pinned with

@@ -3,7 +3,10 @@ on the deterministic synthetic web graph (SURVEY §5.2).
 
 Asserts identical final URL-seen set per seed, identical edges multiset
 (emit-per-occurrence, D3), identical image-URL set — at several depths and
-politeness budgets, with and without the Bloom pre-filter.
+politeness budgets, with the result's seen-filter on and off. The filter
+takes no part in the loop (the exact seen anti-join is the only
+membership test), so turning it on must change nothing but the result's
+``seen_filter``, which must hold every seen key.
 """
 
 from collections import Counter
@@ -65,6 +68,13 @@ def test_parity_with_bloom(spark):
     sim, res = run_both(spark, cfg)
     assert seen_set(res) == sim.seen
     assert edges_multiset(res) == Counter(sim.edges)
+    assert_filter_covers_seen(res)
+
+
+def assert_filter_covers_seen(res):
+    """The result's seen-filter holds every seen key (no false negative)."""
+    probed = res.seen_filter.probe(res.seen, key="dedup_key")
+    assert probed.filter("not maybe_seen").count() == 0
 
 
 def test_politeness_budget_delays_but_never_drops(spark):
@@ -164,6 +174,42 @@ def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
         assert m["rows_frontier_next"] == committed.count()
         assert m["rows_new"] >= m["rows_seen"] + m["rows_overflow"]
     assert res.metrics[-1]["rows_frontier_next"] == 0
+
+
+def test_loop_does_no_filter_work(spark, tmp_path, monkeypatch):
+    """The exact anti-join is the loop's only membership test: with the
+    seen-filter on, crawl() (with and without an initial seen set) and
+    resume() never build or probe it. The result's filter, folded when it
+    is first read, still holds every seen key."""
+    from dataclasses import replace
+
+    from xcrawl3r_spark.operators.dedup import SeenFilter
+
+    def no_filter_work(self, *args, **kwargs):
+        raise AssertionError("the crawl loop built or probed the seen-filter")
+
+    small = G.GraphParams(hosts=3, pages_per_host=6)
+    seeds = G.seeds_df(spark, small, 2)
+    pages = G.pages_df(spark, small, distributed=False)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3,
+                      bloom_enabled=True)
+    durable = replace(cfg, checkpoint_dir=str(tmp_path / "ckpt"))
+    with monkeypatch.context() as mp:
+        mp.setattr(SeenFilter, "build", no_filter_work)
+        mp.setattr(SeenFilter, "probe", no_filter_work)
+        fresh = Crawler(spark, cfg).crawl(seeds, pages)
+        again = Crawler(spark, cfg).crawl(
+            seeds, pages, initial_seen=fresh.seen,
+            start_iteration=fresh.iterations + 1)
+        Crawler(spark, durable).crawl(seeds, pages, max_iterations=2)
+        resumed = Crawler(spark, durable).resume(seeds, pages)
+    assert fresh.iterations > 2
+    # the seeds were all seen: one wave, nothing fetched again
+    assert again.iterations == 1
+    assert seen_set(again) == seen_set(fresh)
+    assert seen_set(resumed) == seen_set(fresh)
+    for res in (fresh, again, resumed):
+        assert_filter_covers_seen(res)
 
 
 def test_out_of_scope_seeds_run_no_iteration(spark):

@@ -165,17 +165,21 @@ def test_ttl_expire_and_recrawl(spark, kind):
     assert {r["url"] for r in surviving2.collect()} == revisited
 
 
-@pytest.mark.parametrize("first_kind,second_bits", [
-    ("bloom", 1 << 16), ("bloom", 1 << 14), ("cuckoo", 1 << 16)],
-    ids=["bloom-resized", "bloom-repartitioned", "cuckoo-to-bloom"])
+@pytest.mark.parametrize("first_kind,second_bits,uncovering", [
+    ("bloom", 1 << 16, False), ("bloom", 1 << 14, False),
+    ("cuckoo", 1 << 16, False), ("bloom", 1 << 14, True)],
+    ids=["bloom-resized", "bloom-repartitioned", "cuckoo-to-bloom",
+         "uncovering"])
 def test_foreign_geometry_filter_keeps_seen_urls_seen(
-        spark, first_kind, second_bits):
+        spark, first_kind, second_bits, uncovering):
     """A seen_filter handed to a Crawler whose config has another filter
-    geometry (or kind) is probed and extended with its OWN geometry. Probed
-    with the second config's geometry it answers "unseen" for keys it holds
-    (or indexes past its bitset), which skips the exact anti-join and
-    re-fetches already-seen URLs — silently when only the partition count
-    differs."""
+    geometry (or kind) is extended with its OWN geometry, and the crawl
+    never trusts it for membership: the exact anti-join against
+    initial_seen decides. Probed with the second config's geometry the
+    filter would answer "unseen" for keys it holds (or index past its
+    bitset); a filter that does not cover initial_seen at all
+    (``uncovering``: an empty one) would answer "unseen" for every key.
+    Either way already-seen URLs must not be fetched again."""
     from xcrawl3r_spark.config import CrawlConfig
     from xcrawl3r_spark.plans.crawl import Crawler
     from xcrawl3r_spark.sources import datagen as G
@@ -193,8 +197,9 @@ def test_foreign_geometry_filter_keeps_seen_urls_seen(
     c2 = Crawler(spark, CrawlConfig(
         **base, filter_kind="bloom", bloom_partitions=4,
         bloom_bits=second_bits))
+    handed = res1.seen_filter.empty() if uncovering else res1.seen_filter
     res2 = c2.crawl(seeds, pages, initial_seen=res1.seen,
-                    initial_filter=res1.seen_filter,
+                    initial_filter=handed,
                     start_iteration=res1.iterations + 1)
     again = {(r["seed_id"], r["url"]) for r in res2.seen.filter(
         f"iter > {res1.iterations}").collect()}

@@ -223,37 +223,6 @@ def test_simhash_near_dup_pigeonhole_exact(spark, sf_dir):
     assert capped <= got
 
 
-def test_stale_keys_keep_anti_join_exact(spark):
-    """Deferred filter folds (crawl-loop job reduction): keys not yet
-    folded into the Bloom filter are passed as stale_keys, and the result
-    must still equal the plain set difference — including the empty-filter
-    fast path."""
-    from pyspark.sql import functions as F
-
-    cand = spark.range(0, 2000).select(F.xxhash64("id").alias("dedup_key"),
-                                       F.col("id").alias("meta"))
-    seen_old = spark.range(500, 1000).select(
-        F.xxhash64("id").alias("dedup_key"))
-    seen_new = spark.range(1500, 1800).select(
-        F.xxhash64("id").alias("dedup_key"))  # NOT folded into the filter
-    seen = seen_old.unionByName(seen_new)
-    bloom = SeenFilter("bloom", 4, (1 << 16, 5)).build(
-        seen_old, key="dedup_key")
-    got = anti_join_seen(
-        cand, seen, key="dedup_key", seen_filter=bloom, keys_unique=True,
-        stale_keys=seen_new,
-    )
-    want = cand.join(seen, "dedup_key", "left_anti")
-    assert sorted(r["meta"] for r in got.collect()) == sorted(
-        r["meta"] for r in want.collect())
-    # empty-filter fast path must honor stale_keys too
-    got_empty = anti_join_seen(
-        cand, seen_new, key="dedup_key", seen_filter=bloom.empty(),
-        keys_unique=True, stale_keys=seen_new)
-    want_empty = cand.join(seen_new, "dedup_key", "left_anti")
-    assert got_empty.count() == want_empty.count() == 1700
-
-
 def test_corpus_clean_stage_invariants(spark, sf_dir):
     """corpus_clean composite: every survivor passes each stage's gate,
     and the result is deterministic."""

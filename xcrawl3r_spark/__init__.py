@@ -5,7 +5,7 @@ A from-scratch reimplementation of the query/data-processing capabilities of
 Spark DataFrames. The reference is a goroutine/callback recursive spider; this
 engine re-expresses the same semantics as an iterative batch pipeline:
 
-  frontier (priority-ordered)  ──anti-join──►  URL-seen set (Bloom pre-filter)
+  frontier (priority-ordered)  ──exact anti-join──►  URL-seen set
           │ politeness window top-k per host
           ▼
   fetch (join vs pages table / pluggable fetcher)

@@ -96,12 +96,14 @@ class CrawlConfig:
     #: enforce robots.txt allow/deny (north rule; the reference only MINES
     #: robots for URLs and ignores its rules, xcrawl3r.go:272)
     obey_robots: bool = False
-    #: Bloom pre-filter for the seen anti-join
+    #: whether CrawlResult.seen_filter carries a probabilistic filter over
+    #: every seen key (folded on first read; the crawl loop itself only
+    #: runs the exact seen anti-join)
     bloom_enabled: bool = True
-    #: probabilistic-filter implementation: "bloom" (append-only, densest)
-    #: or "cuckoo" (deletable — windowed seen-sets / TTL re-crawl;
-    #: operators/cuckoo.py). Both are hash-range partitioned, incremental,
-    #: and property-tested for zero false negatives.
+    #: kind of that filter: "bloom" (append-only, densest) or "cuckoo"
+    #: (deletable — windowed seen-sets / TTL re-crawl via expire_seen;
+    #: operators/cuckoo.py). Both are hash-range partitioned and
+    #: property-tested for zero false negatives.
     filter_kind: str = "bloom"
     #: cuckoo buckets per partition (x4 slots each)
     cuckoo_buckets: int = 1 << 15

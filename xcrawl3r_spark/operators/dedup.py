@@ -22,12 +22,14 @@ here:
    definitely new; the *maybe-seen* minority goes through the exact
    left-anti hash join to kill false positives.
 
-The crawl loop (plans/crawl.py) folds new seen keys into the filter only
-every ``BLOOM_FOLD_EVERY`` (4) waves, and an empty filter skips the probe:
-a fresh crawl probes from wave 5 on, so a 3-wave crawl never probes and
-pays for the filter only in its one tail fold. At 10^10 scale each
-partition table stays ≤ a few hundred MB and partitions are probed
-independently (no single giant broadcast).
+The crawl loop (plans/crawl.py) does not use the filter: its membership
+test is the plain exact anti-join, because per-wave BFS batches gave the
+probe no measured win (a filter pays for membership over a window far
+larger than one wave). With ``bloom_enabled`` a crawl result still carries
+a filter over every seen key, folded once when it is first read, for
+windowed re-crawls (``expire_seen``) and for callers that probe it. At
+10^10 scale each partition table stays ≤ a few hundred MB and partitions
+are probed independently (no single giant broadcast).
 """
 
 from __future__ import annotations
@@ -263,7 +265,6 @@ def anti_join_seen(
     key: str = "dedup_key",
     seen_filter: SeenFilter | None = None,
     keys_unique: bool = False,
-    stale_keys: DataFrame | None = None,
 ) -> DataFrame:
     """candidates \\ seen on ``key`` (D1). Per-seed scope (D2) is folded
     into the key upstream: dedup_key = xxhash64(seed_id, url) — the same
@@ -272,25 +273,14 @@ def anti_join_seen(
     With a ``seen_filter``: definitely-new rows bypass the shuffle
     entirely; only maybe-seen rows are anti-joined exactly. Equivalent to
     the plain anti-join by the no-false-negative property
-    (property-tested).
+    (property-tested) — CONTRACT: ``seen_filter`` must hold every key of
+    ``seen``. A filter missing keys answers "new" for them (an empty
+    filter answers "new" for everything) and they skip the exact join.
 
     ``keys_unique``: the crawl loop only ever inserts post-anti-join,
     batch-deduped rows, so seen keys are unique by construction — skip the
     distinct's full-seen shuffle in that case.
-
-    ``stale_keys``: seen keys NOT yet folded into the probabilistic filter
-    (the crawl loop defers filter folds across a few iterations to save
-    per-iteration jobs). The maybe_seen=false bypass is only sound for
-    keys the filter has absorbed, so bypassing rows are exactly
-    anti-joined against this (small: a few recent iterations) set.
     """
-    if seen_filter is not None and not seen_filter.tables:
-        # empty filter: every candidate is new EXCEPT keys awaiting their
-        # filter fold — skip the Python probe round-trip, keep the (small)
-        # exact stale check
-        if stale_keys is not None:
-            return candidates.join(stale_keys.select(key), key, "left_anti")
-        return candidates
     seen_keys = seen.select(key)
     if not keys_unique:
         seen_keys = seen_keys.distinct()
@@ -309,6 +299,4 @@ def anti_join_seen(
     fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     checked = maybe.join(seen_keys, key, "left_anti")
-    if stale_keys is not None:
-        fresh = fresh.join(stale_keys.select(key), key, "left_anti")
     return fresh.unionByName(checked)

@@ -8,7 +8,7 @@ Public API mirrors the reference's one-constructor-one-method surface
 Per-iteration dataflow (SURVEY §3.4):
 
     frontier[i] --(within-batch dedup, min depth)--> candidates
-      --(Bloom probe + exact left-anti vs seen)-->  new URLs          D1/D2
+      --(exact left-anti vs seen)-->                new URLs          D1/D2
       --(media flag: image exts -> payload branch, marked seen)-->    F3
       --(robots allow/deny broadcast join -> flag, optional)-->       north
       --(per-(seed,host) budget top-k; ineligible rows ride along
@@ -93,7 +93,9 @@ def _ckpt_counts(df: DataFrame, **conds: F.Column) -> tuple[DataFrame, dict]:
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
     """A zero-partition frame: unions and joins over it launch no task
-    (``createDataFrame([])`` parallelizes through Python workers)."""
+    (``createDataFrame([])`` parallelizes through Python workers). It has
+    no size statistics, so a join side that unions it is planned as if it
+    were large (a shuffle AQE later demotes to a broadcast, one job)."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
@@ -117,22 +119,26 @@ class CrawlResult:
     #: live image GETs), ``rows_extracted`` (in-scope emits + visits) and
     #: ``rows_frontier_next`` (the next iteration's frontier)
     metrics: list[dict] = field(default_factory=list)
-    #: the seen-filter as last folded in the loop, and the seen-key
-    #: increments not folded into it yet (see ``seen_filter``)
+    #: the filter the crawl started from, and the seen-key frames not
+    #: folded into it yet (see ``seen_filter``)
     _filter: SeenFilter | None = field(default=None, repr=False)
     _filter_pending: list[DataFrame] = field(default_factory=list, repr=False)
 
     @property
     def seen_filter(self) -> SeenFilter | None:
-        """The final probabilistic seen-filter (all seen keys folded), or
-        None with bloom_enabled off. Self-describing: it carries its kind
-        and geometry, so expire_seen()/crawl(initial_filter=...) on any
-        Crawler probe and extend it with the geometry that built it. The
-        loop's last few increments are folded on first read, once — a
-        caller that never reads the filter never pays for the fold."""
+        """A probabilistic filter over every seen key, or None with
+        bloom_enabled off. It takes no part in the crawl (the loop's
+        membership test is the exact anti-join); it is built for callers
+        such as expire_seen() and crawl(initial_filter=...), folded on
+        first read, once: ``initial_filter`` (or a fresh filter over
+        ``initial_seen``) plus the keys this run marked seen. A caller
+        that never reads it never pays for the fold. Self-describing: it
+        carries its kind and geometry, so any Crawler probes and extends
+        it with the geometry that built it."""
         if self._filter is not None and self._filter_pending:
-            self._filter = self._filter.build(
-                _union(self._filter_pending), key="dedup_key")
+            self._filter = self._filter.build(_union(
+                [df.select("dedup_key") for df in self._filter_pending]),
+                key="dedup_key")
             self._filter_pending = []
         return self._filter
 
@@ -330,36 +336,33 @@ class Crawler:
         frontier, counted = _ckpt_counts(
             self._priority_buckets(frontier), rows=F.lit(True))
         frontier_rows = counted["rows"]
-        seen0 = (_ckpt(initial_seen) if initial_seen is not None
-                 else _empty(spark, seen_schema))
 
         # seen = lazy union of per-iteration increments (each a cheap filter
-        # over a checkpointed parent); collapsed every SEEN_COLLAPSE_EVERY
-        # iterations so the anti-join plan never grows unboundedly.
+        # over a checkpointed parent), None until there is one: a wave with
+        # nothing seen yet runs no anti-join. Collapsed every
+        # SEEN_COLLAPSE_EVERY parts so the anti-join plan never grows
+        # unboundedly.
         SEEN_COLLAPSE_EVERY = 8
-        seen_parts: list[DataFrame] = [seen0]
-        seen = seen0
+        seen = _ckpt(initial_seen) if initial_seen is not None else None
+        seen_parts = 0 if seen is None else 1
 
-        # Incremental seen-filter over dedup_key: fold in each iteration's
-        # NEW rows only, never rescan the whole seen set.
-        # ``initial_filter`` (e.g. from expire_seen's incremental cuckoo
-        # delete) skips the full rebuild over initial_seen; it keeps its
-        # own kind and geometry — cfg's filter settings only shape a fresh
-        # filter.
+        # The seen-filter takes no part in the loop. With bloom_enabled
+        # the result carries one, folded on its first read from these
+        # frames: ``initial_filter`` (e.g. from expire_seen's incremental
+        # cuckoo delete) keeps its own kind and geometry and is trusted
+        # to hold initial_seen; a fresh filter gets initial_seen folded.
         seen_filter: SeenFilter | None = None
+        fold_keys: list[DataFrame] = []
         if cfg.bloom_enabled:
-            if initial_filter is not None:
-                seen_filter = initial_filter
-            else:
+            seen_filter = initial_filter
+            if seen_filter is None:
                 seen_filter = SeenFilter.for_config(cfg)
-                if initial_seen is not None:
-                    seen_filter = seen_filter.build(seen0, key="dedup_key")
+                if seen is not None:
+                    fold_keys.append(seen)
 
         # None -> mined from fetched robots bodies; a resumed run restores
         # the rules mined by its completed iterations (bit-identity)
         robots_rules = robots if robots is not None else initial_robots_rules
-        BLOOM_FOLD_EVERY = 4
-        fold_pending: list[DataFrame] = []
         edges_parts: list[DataFrame] = []
         images_parts: list[DataFrame] = []
         errors_parts: list[DataFrame] = []
@@ -393,17 +396,13 @@ class Crawler:
             # Every downstream branch (media payload, fetch, overflow
             # requeue, seen marking) is a cheap filter over this single
             # DISK_ONLY checkpoint — the batch hits disk once, not once
-            # per branch. Keys not yet folded into the probabilistic
-            # filter (deferred folds, below) are handed over as
-            # stale_keys so the filter's definitely-unseen bypass stays
-            # sound. Ineligible rows (media-aborted F3, robots-denied)
+            # per branch. The exact anti-join is the only membership
+            # test. Ineligible rows (media-aborted F3, robots-denied)
             # ride through the politeness window flagged _elig=False:
             # they sort last, never take a budget slot, never select.
-            new = anti_join_seen(
-                cand, seen, key="dedup_key", seen_filter=seen_filter,
-                keys_unique=True,
-                stale_keys=_union(fold_pending) if fold_pending else None,
-            ).withColumn("_media", is_media)
+            if seen is not None:
+                cand = anti_join_seen(cand, seen, keys_unique=True)
+            new = cand.withColumn("_media", is_media)
             # robots enforcement (north rule, off by default). With no
             # rules table supplied, rules are mined from the robots.txt
             # bodies the crawl itself fetches (seed expansion E5 fetches
@@ -652,9 +651,9 @@ class Crawler:
             # edges/images/errors parts stay LAZY: they are cheap filters
             # over checkpointed parents, materialized once at the end (or
             # by the store commit below).
-            seen_parts.append(seen_it)
-            seen = seen.unionByName(seen_it)
-            if len(seen_parts) >= SEEN_COLLAPSE_EVERY:
+            seen = seen_it if seen is None else seen.unionByName(seen_it)
+            seen_parts += 1
+            if seen_parts >= SEEN_COLLAPSE_EVERY:
                 if cfg.bucketed_seen:
                     # persist the collapsed seen set hash-bucketed on the
                     # anti-join key: subsequent iterations' anti-joins read
@@ -671,23 +670,14 @@ class Crawler:
                     last_bucket_table = name
                 else:
                     seen = _ckpt(seen)
-                seen_parts = [seen]
+                seen_parts = 1
+            if seen_filter is not None:
+                fold_keys.append(seen_it)
             edges_parts.append(edges_it)
             images_parts.append(images_it)
             if payload_errors_it is not None:
                 errors_it = errors_it.unionByName(payload_errors_it)
             errors_parts.append(errors_it)
-            if seen_filter is not None:
-                # fold NEW keys into the filter every few iterations, not
-                # every one: the filter is a pre-prune only — keys not yet
-                # folded are still caught by the exact anti-join (staleness
-                # is safe, it just prunes less) — and each fold is a full
-                # job whose fixed overhead dominates small BFS waves.
-                fold_pending.append(seen_it.select("dedup_key"))
-                if len(fold_pending) >= BLOOM_FOLD_EVERY:
-                    seen_filter = seen_filter.build(
-                        _union(fold_pending), key="dedup_key")
-                    fold_pending = []
             m["t_frontier"] = round(time.perf_counter() - t0, 3)
 
             if self.store is not None:
@@ -730,13 +720,13 @@ class Crawler:
 
         return CrawlResult(
             edges=cat(edges_parts, "edges"),
-            seen=seen,
+            seen=seen if seen is not None else _empty(spark, seen_schema),
             images=cat(images_parts, "images"),
             errors=cat(errors_parts, "errors"),
             iterations=it - start_iteration,
             metrics=metrics,
             _filter=seen_filter,
-            _filter_pending=fold_pending,
+            _filter_pending=fold_keys,
         )
 
     def resume(
