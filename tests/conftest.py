@@ -9,12 +9,18 @@ from xcrawl3r_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # the first catalog read (``spark.catalog.listTables()``) creates the
+    # default database's directory under the warehouse: keep it out of
+    # the working directory
     s = get_spark(
         app="xcrawl3r_spark_tests",
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "4g"},
+        extra_conf={
+            "spark.driver.memory": "4g",
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse")),
+        },
     )
     yield s
 

@@ -166,18 +166,21 @@ def test_txt_jsonl_sinks_roundtrip(spark, tmp_path):
 
 
 def test_config_scaffold_with_retired_keys_loads(tmp_path):
-    """A scaffold written before iceberg_catalog/iceberg_namespace/
-    shuffle_partitions were removed carries them at the SAME version, so
-    create_or_update leaves it untouched; from_yaml must still load it.
-    A misspelt key next to them must still raise."""
-    from dataclasses import asdict
+    """A scaffold written before bucketed_seen/iceberg_catalog/
+    iceberg_namespace/shuffle_partitions were removed carries them at the
+    SAME version, so create_or_update leaves it untouched; from_yaml must
+    still load it. A misspelt key next to them must still raise, and no
+    retired name may shadow a live field (from_yaml would drop it)."""
+    from dataclasses import asdict, fields
 
     import yaml
 
-    from xcrawl3r_spark.config import CONFIG_VERSION
+    from xcrawl3r_spark.config import CONFIG_VERSION, RETIRED_KEYS
 
-    old = {**asdict(CrawlConfig()), "iceberg_catalog": None,
-           "iceberg_namespace": "crawl", "shuffle_partitions": None}
+    assert not RETIRED_KEYS & {f.name for f in fields(CrawlConfig)}
+    old = {**asdict(CrawlConfig()), "bucketed_seen": 8,
+           "iceberg_catalog": None, "iceberg_namespace": "crawl",
+           "shuffle_partitions": None}
     text = (yaml.safe_dump({"version": CONFIG_VERSION}, sort_keys=False)
             + yaml.safe_dump(old, sort_keys=True))
     path = tmp_path / "config.yaml"

@@ -62,6 +62,34 @@ def test_parity_unbounded_depth(spark):
     assert edges_multiset(res) == Counter(sim.edges)
 
 
+def test_parity_across_seen_collapse(spark):
+    """A 12-page chain runs 12 waves, so the seen set is checkpointed at
+    wave 8 (the crawl's SEEN_COLLAPSE_EVERY) and later waves anti-join
+    against the collapsed frame: every URL keeps its simulator depth, and
+    the crawl leaves the session catalog as it found it."""
+    n = 12
+    pages = {
+        f"https://h0.test/p/{i}": (
+            "text/html",
+            (f'<a href="https://h0.test/p/{i + 1}">n</a>'
+             if i + 1 < n else "<p>end</p>"), 200)
+        for i in range(n)
+    }
+    seeds = [("s0", "https://h0.test/p/0")]
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=0,
+                      expand_seeds=False, parallelism=0, bloom_enabled=False)
+    pages_df = spark.createDataFrame(
+        [(u, ct, body, st) for u, (ct, body, st) in pages.items()],
+        "url string, content_type string, body string, status int")
+    seeds_df = spark.createDataFrame(seeds, "seed_id string, url string")
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    res = Crawler(spark, cfg).crawl(seeds_df, pages_df)
+    assert res.iterations == n
+    engine = {(r["seed_id"], r["url"], r["depth"]) for r in res.seen.collect()}
+    assert engine == simulate_crawl(seeds, pages, cfg).seen_depths
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables
+
+
 def test_parity_with_bloom(spark):
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2,
                       bloom_enabled=True, bloom_bits=1 << 14)

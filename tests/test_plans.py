@@ -171,129 +171,6 @@ class TestFrontierPriorityBuckets:
         assert seen_on == seen_off
 
 
-class TestBucketedJoins:
-    def test_bucketed_seen_join_has_no_shuffle(self, spark, tmp_path):
-        """§2.5: co-located joins via bucketing — frontier and seen both
-        bucketed on the dedup key join with NO Exchange on either side
-        (at 10^10 rows this removes the per-iteration seen-set shuffle)."""
-        from xcrawl3r_spark.sinks.tables import write_bucketed
-
-        spark.sql("drop table if exists seen_b")
-        spark.sql("drop table if exists frontier_b")
-        seen = spark.range(0, 10_000).select(
-            F.xxhash64("id").alias("dedup_key"), F.col("id").alias("meta"))
-        frontier = spark.range(5_000, 15_000).select(
-            F.xxhash64("id").alias("dedup_key"),
-            F.col("id").cast("string").alias("url"))
-        write_bucketed(seen, "seen_b", "dedup_key", 8, sort_col="dedup_key")
-        write_bucketed(frontier, "frontier_b", "dedup_key", 8,
-                       sort_col="dedup_key")
-        joined = spark.table("frontier_b").join(
-            spark.table("seen_b"), "dedup_key", "left_anti")
-        # AQE can hide the final plan until execution; audit + execute
-        plan = plan_of(joined)
-        assert count_nodes(plan, "Exchange") == 0, plan
-        assert joined.count() > 0
-        spark.sql("drop table if exists seen_b")
-        spark.sql("drop table if exists frontier_b")
-
-
-class TestBucketedSeenPath:
-    def test_crawl_bucketed_seen_opt_in(self, spark):
-        """cfg.bucketed_seen (r1 verdict item 8): once the collapse window
-        fires, the seen set is a hash-bucketed catalog table; results
-        equal the default path, and an iteration-shaped anti-join against
-        it has an Exchange ONLY on the candidate side — the 10^10-row
-        seen side is read shuffle-free."""
-        from xcrawl3r_spark.config import CrawlConfig
-        from xcrawl3r_spark.plans.crawl import Crawler
-        from xcrawl3r_spark.sources import datagen as G  # noqa: F401
-
-        def bucketed_tables():
-            return sorted(
-                t.name for t in spark.catalog.listTables()
-                if t.name.startswith("xcrawl3r_seen_bucketed"))
-
-        for t in bucketed_tables():
-            spark.sql(f"drop table if exists {t}")
-        n = 12  # chain of 12 pages -> 12 iterations -> collapse at 8
-        pages = [
-            (f"https://h0.test/p/{i}", "text/html",
-             (f'<a href="https://h0.test/p/{i + 1}">n</a>'
-              if i + 1 < n else "<p>end</p>"), 200)
-            for i in range(n)
-        ]
-        pages_df = spark.createDataFrame(
-            pages, "url string, content_type string, body string, status int")
-        seeds = spark.createDataFrame(
-            [("s0", "https://h0.test/p/0")], "seed_id string, url string")
-
-        def cfg(buckets):
-            return CrawlConfig(
-                domains=["test"], include_subdomains=True, depth=0,
-                expand_seeds=False, parallelism=0, bloom_enabled=False,
-                bucketed_seen=buckets)
-
-        res_b = Crawler(spark, cfg(8)).crawl(seeds, pages_df)
-        seen_b = {(r["url"], r["depth"]) for r in res_b.seen.collect()}
-        made = bucketed_tables()
-        assert made, "no bucketed seen table created"  # run-scoped name
-        res_p = Crawler(spark, cfg(0)).crawl(seeds, pages_df)
-        assert seen_b == {(r["url"], r["depth"]) for r in res_p.seen.collect()}
-        assert len(seen_b) == n
-
-        # iteration-shaped probe: candidates (non-bucketed, shuffled) vs
-        # the bucketed seen table (read in place, no exchange above it).
-        # Broadcast is disabled for the audit: the test table is tiny and
-        # would broadcast, but at 10^10 seen rows the join is always SMJ —
-        # the bucketed-read plan is the one that matters at scale.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            seen_tbl = spark.table(made[0])
-            cand = spark.range(0, 1000).select(
-                F.xxhash64("id").alias("dedup_key"),
-                F.col("id").cast("string").alias("url"))
-            probe = cand.join(
-                seen_tbl.select("dedup_key"), "dedup_key", "left_anti")
-            plan = plan_of(probe)
-            assert count_nodes(plan, "Exchange") == 1, plan  # candidate side
-            assert "Bucketed: true" in plan, plan            # seen bucketed
-            probe.count()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        for t in bucketed_tables():
-            spark.sql(f"drop table if exists {t}")
-
-    def test_bucketed_seen_two_runs_do_not_clobber(self, spark):
-        """Run-scoped table names (r2 review finding): a second bucketed
-        crawl must not overwrite the first run's seen table while its
-        CrawlResult still references it."""
-        from xcrawl3r_spark.config import CrawlConfig
-        from xcrawl3r_spark.plans.crawl import Crawler
-
-        def mk_pages(host, n):
-            return spark.createDataFrame(
-                [(f"https://{host}.test/p/{i}", "text/html",
-                  (f'<a href="https://{host}.test/p/{i + 1}">n</a>'
-                   if i + 1 < n else "<p>end</p>"), 200)
-                 for i in range(n)],
-                "url string, content_type string, body string, status int")
-
-        cfg = CrawlConfig(
-            domains=["test"], include_subdomains=True, depth=0,
-            expand_seeds=False, parallelism=0, bloom_enabled=False,
-            bucketed_seen=4)
-        seeds_a = spark.createDataFrame(
-            [("s0", "https://ha.test/p/0")], "seed_id string, url string")
-        res_a = Crawler(spark, cfg).crawl(seeds_a, mk_pages("ha", 10))
-        before = sorted(r["url"] for r in res_a.seen.collect())
-        seeds_b = spark.createDataFrame(
-            [("s0", "https://hb.test/p/0")], "seed_id string, url string")
-        Crawler(spark, cfg).crawl(seeds_b, mk_pages("hb", 10)).seen.count()
-        after = sorted(r["url"] for r in res_a.seen.collect())
-        assert before == after and len(before) == 10
-
-
 class TestNewOperatorPlans:
     def test_corpus_clean_stays_native_and_broadcasts(self, spark, sf_dir):
         """The cleaning composite must stay JVM-native (no Python/Arrow

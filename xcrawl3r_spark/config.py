@@ -1,9 +1,10 @@
 """Crawl configuration.
 
 Mirrors the reference's ``xcrawl3r.Configuration``
-(pkg/xcrawl3r/xcrawl3r.go:366-376) plus batch-engine knobs the north rule
-adds (politeness budget per iteration, Bloom sizing, checkpointing, skew
-salting). Defaults follow internal/configuration/configuration.go:95-110.
+(pkg/xcrawl3r/xcrawl3r.go:366-376) plus the batch engine's own knobs:
+fetch mode, dedup scope, robots enforcement, the result's seen-filter
+geometry, skew salting, image ingest, snapshot checkpointing and frontier
+range buckets. Defaults follow internal/configuration/configuration.go:95-110.
 """
 
 from __future__ import annotations
@@ -18,8 +19,8 @@ CONFIG_VERSION = "1.2.0"
 #: fields removed from CrawlConfig that ``create_or_update`` wrote into
 #: every scaffold before their removal; ``from_yaml`` drops them so those
 #: files keep loading (any other unknown key still errors)
-RETIRED_KEYS = frozenset({"iceberg_catalog", "iceberg_namespace",
-                          "shuffle_partitions"})
+RETIRED_KEYS = frozenset({"bucketed_seen", "iceberg_catalog",
+                          "iceberg_namespace", "shuffle_partitions"})
 
 #: spellings a boolean XCRAWL3R_* variable accepts (case-insensitive);
 #: any other value raises rather than silently reading as False
@@ -123,14 +124,6 @@ class CrawlConfig:
     #: checkpoint directory for frontier/seen snapshots; None = no
     #: checkpointing (resume disabled)
     checkpoint_dir: str | None = None
-    #: persist the collapsed seen set as a hash-bucketed catalog table
-    #: (N buckets on dedup_key, 0 = off). Every anti-join against seen
-    #: then reads the bucketed layout with NO exchange on the seen side —
-    #: at 10^10 seen rows this removes the per-collapse-window seen-set
-    #: shuffle (plan-audited in tests/test_plans.py). Tables ping-pong
-    #: between two names (a catalog table cannot be overwritten while
-    #: it is being read).
-    bucketed_seen: int = 0
     #: range-partitioned priority buckets for the frontier (north rule
     #: A5): 0 = off (default), None = session shuffle partitions, N = N
     #: buckets. Total order (depth, disc_iter, host_rank, url_hash);

@@ -51,7 +51,7 @@ from xcrawl3r_spark.operators.politeness import (
     politeness_flag,
     robots_flag,
 )
-from xcrawl3r_spark.sinks.tables import SnapshotStore, write_bucketed
+from xcrawl3r_spark.sinks.tables import SnapshotStore
 
 #: the frontier's columns. resume() reads a committed frontier with this
 #: schema: no footer-inference job, and snapshots from before the src_url
@@ -67,6 +67,8 @@ EMPTY_SCHEMAS = {
     "images": "seed_id string, url string, iter int",
     "errors": "seed_id string, url string, error string, stage string, "
               "iter int",
+    "seen": "seed_id string, url string, url_hash bigint, dedup_key bigint, "
+            "host string, depth int, iter int",
 }
 
 
@@ -92,10 +94,8 @@ def _ckpt_counts(df: DataFrame, **conds: F.Column) -> tuple[DataFrame, dict]:
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    """A zero-partition frame: unions and joins over it launch no task
-    (``createDataFrame([])`` parallelizes through Python workers). It has
-    no size statistics, so a join side that unions it is planned as if it
-    were large (a shuffle AQE later demotes to a broadcast, one job)."""
+    """A zero-partition frame: actions over it launch no task
+    (``createDataFrame([])`` parallelizes through Python workers)."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
 
@@ -144,27 +144,12 @@ class CrawlResult:
 
 
 class Crawler:
-    #: session-wide run counter: each crawl() gets its own bucketed-seen
-    #: table namespace. With a fixed name, two Crawlers in one session
-    #: (or a later crawl while the first CrawlResult.seen is still held)
-    #: would overwrite each other's seen table mid-plan.
-    _run_seq = 0
-
     def __init__(self, spark: SparkSession, cfg: CrawlConfig | None = None):
         from xcrawl3r_spark.session import ship_package
 
         self.spark = spark
         ship_package(spark)  # workers need the package for UDF stages
         self.cfg = cfg or CrawlConfig()
-        self._bucket_flip = 0  # ping-pong index for cfg.bucketed_seen tables
-        #: this Crawler's live bucketed-seen table from its LAST crawl —
-        #: dropped at the start of the next crawl() so a long-lived
-        #: session (StreamingCrawler runs one crawl per micro-batch)
-        #: keeps at most one run's table alive per Crawler. Consequence
-        #: (documented): starting a new crawl() on the same Crawler
-        #: invalidates the previous CrawlResult.seen when
-        #: cfg.bucketed_seen is on — collect what you need first.
-        self._prev_bucket_tables: list[str] = []
         self.store = (SnapshotStore(spark, self.cfg.checkpoint_dir)
                       if self.cfg.checkpoint_dir else None)
 
@@ -305,22 +290,12 @@ class Crawler:
         on_iteration: "Callable[[int, DataFrame], None] | None" = None,
     ) -> CrawlResult:
         cfg, spark = self.cfg, self.spark
-        Crawler._run_seq += 1
-        run_id = Crawler._run_seq  # namespaces this run's bucketed tables
-        for t in self._prev_bucket_tables:  # see __init__ — bounded catalog
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._prev_bucket_tables = []
-        last_bucket_table: str | None = None
         # URL-class columns, built once per crawl rather than once per
         # wave: each builder is a chain of driver->JVM calls
         url = F.col("url")
         in_scope = url.rlike(cfg.scope_pattern())
         is_media, is_image = U.is_media_col(url), U.is_image_col(url)
         is_file = U.is_file_col(url)
-        seen_schema = ", ".join(f"{c} {t}" for c, t in [
-            ("seed_id", "string"), ("url", "string"), ("url_hash", "long"),
-            ("dedup_key", "long"), ("host", "string"), ("depth", "int"),
-            ("iter", "int")])
 
         if initial_frontier is not None:
             frontier = initial_frontier
@@ -339,9 +314,9 @@ class Crawler:
 
         # seen = lazy union of per-iteration increments (each a cheap filter
         # over a checkpointed parent), None until there is one: a wave with
-        # nothing seen yet runs no anti-join. Collapsed every
-        # SEEN_COLLAPSE_EVERY parts so the anti-join plan never grows
-        # unboundedly.
+        # nothing seen yet runs no anti-join. Every SEEN_COLLAPSE_EVERY
+        # parts the union is checkpointed into one frame, so the anti-join
+        # plan never grows unboundedly.
         SEEN_COLLAPSE_EVERY = 8
         seen = _ckpt(initial_seen) if initial_seen is not None else None
         seen_parts = 0 if seen is None else 1
@@ -654,22 +629,7 @@ class Crawler:
             seen = seen_it if seen is None else seen.unionByName(seen_it)
             seen_parts += 1
             if seen_parts >= SEEN_COLLAPSE_EVERY:
-                if cfg.bucketed_seen:
-                    # persist the collapsed seen set hash-bucketed on the
-                    # anti-join key: subsequent iterations' anti-joins read
-                    # it with no exchange on the seen side (the 10^10-row
-                    # side); only the small per-iteration candidate batch
-                    # shuffles. Ping-pong names: a catalog table cannot be
-                    # overwritten while the plan still reads it.
-                    name = (f"xcrawl3r_seen_bucketed_r{run_id}"
-                            f"_{self._bucket_flip}")
-                    self._bucket_flip ^= 1
-                    write_bucketed(seen, name, "dedup_key",
-                                   cfg.bucketed_seen, sort_col="dedup_key")
-                    seen = spark.table(name)
-                    last_bucket_table = name
-                else:
-                    seen = _ckpt(seen)
+                seen = _ckpt(seen)
                 seen_parts = 1
             if seen_filter is not None:
                 fold_keys.append(seen_it)
@@ -708,19 +668,10 @@ class Crawler:
         def cat(parts, key):
             return _union(parts) if parts else _empty(spark, EMPTY_SCHEMAS[key])
 
-        if last_bucket_table is not None:
-            # the final seen reads only the LAST-written flip; the other
-            # flip's table (re-written every other collapse) is dead —
-            # drop it now, remember the live one for the next crawl()
-            for i in (0, 1):
-                t = f"xcrawl3r_seen_bucketed_r{run_id}_{i}"
-                if t != last_bucket_table:
-                    spark.sql(f"DROP TABLE IF EXISTS {t}")
-            self._prev_bucket_tables = [last_bucket_table]
-
         return CrawlResult(
             edges=cat(edges_parts, "edges"),
-            seen=seen if seen is not None else _empty(spark, seen_schema),
+            seen=seen if seen is not None else _empty(
+                spark, EMPTY_SCHEMAS["seen"]),
             images=cat(images_parts, "images"),
             errors=cat(errors_parts, "errors"),
             iterations=it - start_iteration,

@@ -127,34 +127,3 @@ class SnapshotStore:
             reader = reader.schema(schema)
         return reader.parquet(commits[0]["path"])
 
-
-def write_bucketed(
-    df: DataFrame, table: str, bucket_col: str, n_buckets: int,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a table hash-bucketed on ``bucket_col`` (SURVEY §2.5): two
-    tables bucketed the same way join WITHOUT a shuffle — the posture for
-    the 10^10-row seen set joined against frontier batches every
-    iteration on a real cluster (plan-audited in tests/test_plans.py).
-
-    Uses saveAsTable (bucket metadata lives in the session catalog);
-    sort_col additionally sorts within buckets so sort-merge joins skip
-    the sort too.
-    """
-    spark = df.sparkSession
-    if not spark.catalog.tableExists(table):
-        # a killed run can leave the managed location on disk with no
-        # catalog entry; CREATE then fails with LOCATION_ALREADY_EXISTS.
-        # Only local-filesystem warehouses can be cleaned here (the
-        # sandbox case); remote schemes (hdfs:/s3a:/...) are left alone.
-        wh = spark.conf.get("spark.sql.warehouse.dir", "")
-        local = wh[len("file:"):] if wh.startswith("file:") else (
-            wh if "://" not in wh else None)
-        if local:
-            loc = os.path.join(local, table.lower())
-            if os.path.isdir(loc):
-                shutil.rmtree(loc)
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(table)
