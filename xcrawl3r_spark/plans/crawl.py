@@ -94,7 +94,7 @@ def _ckpt_counts(df: DataFrame, **conds: F.Column) -> tuple[DataFrame, dict]:
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    """A zero-partition frame: actions over it launch no task
+    """A zero-partition frame: unions and joins over it launch no task
     (``createDataFrame([])`` parallelizes through Python workers)."""
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
 
