@@ -157,7 +157,7 @@ def _crawl_cfg(**kw):
 
     base = dict(
         domains=["test"], include_subdomains=True, depth=CRAWL_DEPTH,
-        parallelism=0, bloom_enabled=True, global_dedup=True,
+        parallelism=0, global_dedup=True,
     )
     base.update(kw)
     return CrawlConfig(**base)
@@ -260,8 +260,8 @@ def run_crawl_http(spark, n_pages=512, fanout=8):
     base = f"http://127.0.0.1:{server.server_port}"
     try:
         cfg = _crawl_cfg(fetch_mode="http", expand_seeds=False,
-                         bloom_enabled=False, domains=["127.0.0.1"],
-                         include_subdomains=False, concurrency=32)
+                         domains=["127.0.0.1"], include_subdomains=False,
+                         concurrency=32)
         seeds = spark.createDataFrame(
             [("s0", f"{base}/p/0")], "seed_id string, url string")
         reps = int(os.environ.get("BENCH_CRAWL_REPS", "2"))

@@ -87,31 +87,6 @@ def test_config_unknown_key_rejected(tmp_path):
         assert "dephts" in str(e)
 
 
-def test_config_rejects_bad_filter_geometry():
-    """Seen-filter geometry fails at construction, not waves later inside
-    an executor fold (bits=100 died there with an IndexError; partitions=0
-    put every key in one partition)."""
-    for bad in (dict(bloom_bits=100), dict(bloom_bits=0),
-                dict(bloom_bits=-8), dict(bloom_partitions=0),
-                dict(bloom_hashes=0), dict(cuckoo_buckets=0),
-                dict(filter_kind="cuckoo", cuckoo_buckets=0),
-                dict(filter_kind="Bloom")):
-        with pytest.raises(ValueError):
-            CrawlConfig(**bad)
-    CrawlConfig(bloom_bits=8, bloom_partitions=1, bloom_hashes=1,
-                cuckoo_buckets=1)
-
-
-def test_config_env_bad_filter_geometry_fails_fast(monkeypatch):
-    monkeypatch.setenv("XCRAWL3R_BLOOM_BITS", "100")
-    with pytest.raises(ValueError, match="bloom_bits"):
-        CrawlConfig.from_yaml()
-    monkeypatch.setenv("XCRAWL3R_BLOOM_BITS", "1024")
-    monkeypatch.setenv("XCRAWL3R_BLOOM_PARTITIONS", "0")
-    with pytest.raises(ValueError, match="bloom_partitions"):
-        CrawlConfig.from_yaml()
-
-
 @pytest.mark.parametrize("raw,want", [
     (" On ", True), ("YES", True), ("1", True), ("true", True),
     ("Off", False), (" no", False), ("0", False), ("FALSE", False),
@@ -167,11 +142,13 @@ def test_txt_jsonl_sinks_roundtrip(spark, tmp_path):
 
 def test_config_scaffold_with_retired_keys_loads(tmp_path):
     """A scaffold written before bucketed_seen/iceberg_catalog/
-    iceberg_namespace/shuffle_partitions were removed carries them at the
-    SAME version, so create_or_update leaves it untouched; from_yaml must
-    still load it. A misspelt key next to them must still raise, and no
-    retired name may shadow a live field (from_yaml would drop it)."""
-    from dataclasses import asdict, fields
+    iceberg_namespace/shuffle_partitions and the seen-filter knobs were
+    removed carries them at the SAME version, so create_or_update leaves
+    it untouched; from_yaml must still load it. A misspelt key next to
+    them must still raise, and no retired name may shadow a live field
+    (from_yaml would drop it). ``bloom_enabled=`` is still accepted as a
+    keyword, and ignored."""
+    from dataclasses import asdict, fields, replace
 
     import yaml
 
@@ -180,7 +157,11 @@ def test_config_scaffold_with_retired_keys_loads(tmp_path):
     assert not RETIRED_KEYS & {f.name for f in fields(CrawlConfig)}
     old = {**asdict(CrawlConfig()), "bucketed_seen": 8,
            "iceberg_catalog": None, "iceberg_namespace": "crawl",
-           "shuffle_partitions": None}
+           "shuffle_partitions": None, "bloom_enabled": True,
+           "filter_kind": "bloom", "bloom_partitions": 8,
+           "bloom_bits": 1 << 20, "bloom_hashes": 7,
+           "cuckoo_buckets": 1 << 15}
+    assert set(old) - set(asdict(CrawlConfig())) == RETIRED_KEYS
     text = (yaml.safe_dump({"version": CONFIG_VERSION}, sort_keys=False)
             + yaml.safe_dump(old, sort_keys=True))
     path = tmp_path / "config.yaml"
@@ -195,6 +176,10 @@ def test_config_scaffold_with_retired_keys_loads(tmp_path):
         raise AssertionError("typo key must raise")
     except ValueError as e:
         assert "dephts" in str(e) and "iceberg" not in str(e)
+
+    passed = CrawlConfig(depth=3, bloom_enabled=True, global_dedup=True)
+    assert passed == CrawlConfig(depth=3, global_dedup=True)
+    assert replace(passed, depth=2) == CrawlConfig(depth=2, global_dedup=True)
 
 
 def test_every_config_field_is_read():

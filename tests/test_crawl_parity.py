@@ -3,10 +3,10 @@ on the deterministic synthetic web graph (SURVEY §5.2).
 
 Asserts identical final URL-seen set per seed, identical edges multiset
 (emit-per-occurrence, D3), identical image-URL set — at several depths and
-politeness budgets, with the result's seen-filter on and off. The filter
-takes no part in the loop (the exact seen anti-join is the only
-membership test), so turning it on must change nothing but the result's
-``seen_filter``, which must hold every seen key.
+politeness budgets. The exact seen anti-join is the loop's only
+membership test: a crawl started from an earlier seen set (follow-up,
+resume) fetches none of its URLs again. A Bloom seen-filter built over a
+crawl's seen keys answers the anti-join exactly as the plain join does.
 """
 
 from collections import Counter
@@ -45,8 +45,7 @@ def edges_multiset(res):
 
 @pytest.mark.parametrize("depth", [1, 2, 3])
 def test_parity_depths(spark, depth):
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=depth,
-                      bloom_enabled=False)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=depth)
     sim, res = run_both(spark, cfg)
     assert seen_set(res) == sim.seen
     assert edges_multiset(res) == Counter(sim.edges)
@@ -55,8 +54,7 @@ def test_parity_depths(spark, depth):
 
 def test_parity_unbounded_depth(spark):
     small = G.GraphParams(hosts=3, pages_per_host=6)
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=0,
-                      bloom_enabled=False)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=0)
     sim, res = run_both(spark, cfg, params=small)
     assert seen_set(res) == sim.seen
     assert edges_multiset(res) == Counter(sim.edges)
@@ -77,7 +75,7 @@ def test_parity_across_seen_collapse(spark):
     }
     seeds = [("s0", "https://h0.test/p/0")]
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=0,
-                      expand_seeds=False, parallelism=0, bloom_enabled=False)
+                      expand_seeds=False, parallelism=0)
     pages_df = spark.createDataFrame(
         [(u, ct, body, st) for u, (ct, body, st) in pages.items()],
         "url string, content_type string, body string, status int")
@@ -91,29 +89,35 @@ def test_parity_across_seen_collapse(spark):
 
 
 def test_parity_with_bloom(spark):
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2,
-                      bloom_enabled=True, bloom_bits=1 << 14)
+    """Depth-2 parity, then the Bloom seen set over the crawl's output: a
+    filter built from wave 1's seen keys holds every one of them, and the
+    filter-assisted anti_join_seen of the whole seen set against wave 1
+    returns exactly the later waves' rows."""
+    from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen
+
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2)
     sim, res = run_both(spark, cfg)
     assert seen_set(res) == sim.seen
     assert edges_multiset(res) == Counter(sim.edges)
-    assert_filter_covers_seen(res)
-
-
-def assert_filter_covers_seen(res):
-    """The result's seen-filter holds every seen key (no false negative)."""
-    probed = res.seen_filter.probe(res.seen, key="dedup_key")
-    assert probed.filter("not maybe_seen").count() == 0
+    first = res.seen.filter("iter = 1")
+    bloom = SeenFilter("bloom", 4, (1 << 14, 7)).build(first, key="dedup_key")
+    assert bloom.probe(first, key="dedup_key").filter(
+        "not maybe_seen").count() == 0
+    later = res.seen.filter("iter > 1").collect()
+    assert 0 < len(later) < len(sim.seen)
+    got = anti_join_seen(res.seen, first, seen_filter=bloom).collect()
+    assert sorted(got) == sorted(later)
 
 
 def test_politeness_budget_delays_but_never_drops(spark):
     # tiny budget -> more iterations, same final sets
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2,
-                      parallelism=2, bloom_enabled=False)
+                      parallelism=2)
     sim, res = run_both(spark, cfg)
     assert seen_set(res) == sim.seen
     assert edges_multiset(res) == Counter(sim.edges)
     cfg_nobudget = CrawlConfig(domains=["test"], include_subdomains=True,
-                               depth=2, parallelism=0, bloom_enabled=False)
+                               depth=2, parallelism=0)
     _, res2 = run_both(spark, cfg_nobudget)
     assert seen_set(res2) == seen_set(res)
     assert res.iterations > res2.iterations  # budget stretched the schedule
@@ -127,8 +131,7 @@ def test_per_seed_vs_global_dedup(spark):
     seeds_df = spark.createDataFrame(seeds, "seed_id string, url string")
     pages_df = G.pages_df(spark, P, distributed=False)
 
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2,
-                      bloom_enabled=False)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=2)
     res = Crawler(spark, cfg).crawl(seeds_df, pages_df)
     sim = simulate_crawl(seeds, G.pages_dict(P), cfg)
     assert seen_set(res) == sim.seen
@@ -136,7 +139,7 @@ def test_per_seed_vs_global_dedup(spark):
     assert len(per_seed_urls) > len(set(per_seed_urls))  # cross-seed overlap
 
     cfg_g = CrawlConfig(domains=["test"], include_subdomains=True, depth=2,
-                        bloom_enabled=False, global_dedup=True)
+                        global_dedup=True)
     res_g = Crawler(spark, cfg_g).crawl(seeds_df, pages_df)
     urls_g = [r["url"] for r in res_g.seen.collect()]
     assert len(urls_g) == len(set(urls_g))  # globally unique
@@ -148,8 +151,7 @@ def test_per_seed_vs_global_dedup(spark):
 def test_errors_surface_missing_pages(spark):
     # sitemaps exist but most /s/*.js variants of pages absent from the
     # graph would 404 -> recorded, not raised
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=1,
-                      bloom_enabled=False)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=1)
     sim, res = run_both(spark, cfg)
     got = {(r["seed_id"], r["url"]) for r in res.errors.collect()}
     want = {(s, u) for s, u, _ in sim.errors}
@@ -163,7 +165,7 @@ def test_crawl_ordering_bfs_wave_parity(spark, budget):
     simulator — with and without politeness delays (overflow requeues at
     the SAME depth, so ordering-by-wave is invariant to the budget)."""
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3,
-                      parallelism=budget, bloom_enabled=True)
+                      parallelism=budget)
     sim, res = run_both(spark, cfg)
     engine = {(r["seed_id"], r["url"], r["depth"]) for r in res.seen.collect()}
     assert engine == sim.seen_depths
@@ -183,8 +185,7 @@ def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "isEmpty", no_probe)
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3,
-                      parallelism=2, bloom_enabled=True,
-                      checkpoint_dir=str(tmp_path / "ckpt"))
+                      parallelism=2, checkpoint_dir=str(tmp_path / "ckpt"))
     pages = G.pages_dict(P)
     seeds = [(r["seed_id"], r["url"]) for r in G.seeds_rows(P, 3)]
     sim = simulate_crawl(seeds, pages, cfg)
@@ -204,40 +205,28 @@ def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
     assert res.metrics[-1]["rows_frontier_next"] == 0
 
 
-def test_loop_does_no_filter_work(spark, tmp_path, monkeypatch):
-    """The exact anti-join is the loop's only membership test: with the
-    seen-filter on, crawl() (with and without an initial seen set) and
-    resume() never build or probe it. The result's filter, folded when it
-    is first read, still holds every seen key."""
+def test_seen_urls_are_not_fetched_again(spark, tmp_path):
+    """A crawl started from an earlier crawl's seen set (``initial_seen``)
+    or resumed from its snapshots fetches none of the seen URLs again."""
     from dataclasses import replace
-
-    from xcrawl3r_spark.operators.dedup import SeenFilter
-
-    def no_filter_work(self, *args, **kwargs):
-        raise AssertionError("the crawl loop built or probed the seen-filter")
 
     small = G.GraphParams(hosts=3, pages_per_host=6)
     seeds = G.seeds_df(spark, small, 2)
     pages = G.pages_df(spark, small, distributed=False)
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3,
-                      bloom_enabled=True)
+    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=3)
     durable = replace(cfg, checkpoint_dir=str(tmp_path / "ckpt"))
-    with monkeypatch.context() as mp:
-        mp.setattr(SeenFilter, "build", no_filter_work)
-        mp.setattr(SeenFilter, "probe", no_filter_work)
-        fresh = Crawler(spark, cfg).crawl(seeds, pages)
-        again = Crawler(spark, cfg).crawl(
-            seeds, pages, initial_seen=fresh.seen,
-            start_iteration=fresh.iterations + 1)
-        Crawler(spark, durable).crawl(seeds, pages, max_iterations=2)
-        resumed = Crawler(spark, durable).resume(seeds, pages)
+    fresh = Crawler(spark, cfg).crawl(seeds, pages)
+    again = Crawler(spark, cfg).crawl(
+        seeds, pages, initial_seen=fresh.seen,
+        start_iteration=fresh.iterations + 1)
+    Crawler(spark, durable).crawl(seeds, pages, max_iterations=2)
+    resumed = Crawler(spark, durable).resume(seeds, pages)
     assert fresh.iterations > 2
     # the seeds were all seen: one wave, nothing fetched again
     assert again.iterations == 1
+    assert again.seen.filter(f"iter > {fresh.iterations}").count() == 0
     assert seen_set(again) == seen_set(fresh)
     assert seen_set(resumed) == seen_set(fresh)
-    for res in (fresh, again, resumed):
-        assert_filter_covers_seen(res)
 
 
 def test_out_of_scope_seeds_run_no_iteration(spark):
@@ -261,7 +250,7 @@ def test_overflow_alone_keeps_the_loop_going(spark):
     from xcrawl3r_spark.functions.urls import is_media_url
 
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=1,
-                      parallelism=1, bloom_enabled=False)
+                      parallelism=1)
     sim, res = run_both(spark, cfg, n_seeds=2)
     assert seen_set(res) == sim.seen
     per_host = Counter((s, urlsplit(u).hostname)

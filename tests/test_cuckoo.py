@@ -1,7 +1,6 @@
 """Partitioned cuckoo filter (the deletable seen-set fallback): no false
 negatives (incl. through merges and stash overflow), delete support,
-anti-join equivalence, crawl parity with filter_kind='cuckoo', and a
-seen-filter handed to a crawler of another filter geometry."""
+anti-join equivalence, and a seen-filter windowed beside a TTL re-crawl."""
 
 import numpy as np
 import pytest
@@ -101,26 +100,15 @@ def test_partitioned_build_merge_probe_spark(spark):
         r[0] for r in want.collect())
 
 
-@pytest.mark.parametrize("depth", [2])
-def test_crawl_parity_with_cuckoo(spark, depth):
-    from xcrawl3r_spark.config import CrawlConfig
-
-    import test_crawl_parity as tcp
-    run_both, seen_set = tcp.run_both, tcp.seen_set
-
-    cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=depth,
-                      parallelism=0, bloom_enabled=True,
-                      filter_kind="cuckoo", cuckoo_buckets=1 << 10)
-    sim, res = run_both(spark, cfg)
-    assert seen_set(res) == sim.seen
-
-
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
 def test_ttl_expire_and_recrawl(spark, kind):
-    """Windowed seen-set: expire_seen drops pre-window visits (cuckoo:
-    incremental filter DELETE; bloom: distributed rebuild) and a follow-up
-    crawl re-visits exactly the expired, still-reachable URLs."""
+    """Windowed seen-set: expire_seen drops pre-window visits and a
+    follow-up crawl re-visits exactly the expired, still-reachable URLs.
+    A seen-filter windowed the same way (cuckoo: incremental DELETE of the
+    expired keys; bloom: rebuild over the survivors) lets anti_join_seen
+    re-admit exactly the URLs the crawl re-visits."""
     from xcrawl3r_spark.config import CrawlConfig
+    from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen
     from xcrawl3r_spark.plans.crawl import Crawler
 
     n = 6
@@ -135,81 +123,41 @@ def test_ttl_expire_and_recrawl(spark, kind):
     seeds = spark.createDataFrame(
         [("s0", "https://h0.test/p/0")], "seed_id string, url string")
     cfg = CrawlConfig(domains=["test"], include_subdomains=True, depth=0,
-                      expand_seeds=False, parallelism=0, filter_kind=kind,
-                      cuckoo_buckets=1 << 10)
+                      expand_seeds=False, parallelism=0)
     c = Crawler(spark, cfg)
     res1 = c.crawl(seeds, pages_df)
-    assert res1.seen.count() == n and res1.seen_filter.tables
-    assert res1.seen_filter.kind == kind
+    assert res1.seen.count() == n
     # expire everything first visited before iteration 4 (p0, p1, p2)
-    surviving, filt = c.expire_seen(res1.seen, res1.seen_filter, before_iter=4)
+    surviving = c.expire_seen(res1.seen, before_iter=4)
     assert surviving.count() == n - 3
-    # CONTRACT (r2 review finding): the follow-up crawl continues the
-    # iteration clock — restarting at 1 would stamp re-visits OLDER than
-    # surviving rows and invert the TTL ordering for the next cycle
+    expired = res1.seen.filter("iter < 4")
+    geometry = {"cuckoo": (1 << 10,), "bloom": (1 << 14, 7)}[kind]
+    filt = SeenFilter(kind, 4, geometry).build(res1.seen, key="dedup_key")
+    if kind == "cuckoo":
+        filt = filt.delete(np.array(
+            [r["dedup_key"] for r in expired.collect()], dtype=np.int64))
+    else:
+        filt = filt.empty().build(surviving, key="dedup_key")
+    assert filt.probe(surviving, key="dedup_key").filter(
+        "not maybe_seen").count() == 0
+    assert filt.probe(expired, key="dedup_key").filter(
+        "maybe_seen").count() == 0
+    # CONTRACT: the follow-up crawl continues the iteration clock —
+    # restarting at 1 would stamp re-visits OLDER than surviving rows and
+    # invert the TTL ordering for the next cycle
     res2 = c.crawl(seeds, pages_df, initial_seen=surviving,
-                   initial_filter=filt,
                    start_iteration=res1.iterations + 1)
     survived_urls = {r["url"] for r in surviving.collect()}
     revisited = {
         r["url"] for r in res2.seen.filter(
             f"iter > {res1.iterations}").collect()} - survived_urls
     assert revisited == {f"https://h0.test/p/{i}" for i in range(3)}
+    readmitted = anti_join_seen(res1.seen, surviving, seen_filter=filt)
+    assert {r["url"] for r in readmitted.collect()} == revisited
     # the window boundary is respected: surviving URLs were NOT re-fetched
     iter_by_url = {r["url"]: r["iter"] for r in res2.seen.collect()}
     assert all(4 <= iter_by_url[u] <= res1.iterations for u in survived_urls)
     # the clock stays monotone: a SECOND expire cycle now expires the
     # oldest-visited rows (the survivors of cycle 1), not the re-visits
-    surviving2, _ = c.expire_seen(
-        res2.seen, res2.seen_filter, before_iter=res1.iterations + 1)
+    surviving2 = c.expire_seen(res2.seen, before_iter=res1.iterations + 1)
     assert {r["url"] for r in surviving2.collect()} == revisited
-
-
-@pytest.mark.parametrize("first_kind,second_bits,uncovering", [
-    ("bloom", 1 << 16, False), ("bloom", 1 << 14, False),
-    ("cuckoo", 1 << 16, False), ("bloom", 1 << 14, True)],
-    ids=["bloom-resized", "bloom-repartitioned", "cuckoo-to-bloom",
-         "uncovering"])
-def test_foreign_geometry_filter_keeps_seen_urls_seen(
-        spark, first_kind, second_bits, uncovering):
-    """A seen_filter handed to a Crawler whose config has another filter
-    geometry (or kind) is extended with its OWN geometry, and the crawl
-    never trusts it for membership: the exact anti-join against
-    initial_seen decides. Probed with the second config's geometry the
-    filter would answer "unseen" for keys it holds (or index past its
-    bitset); a filter that does not cover initial_seen at all
-    (``uncovering``: an empty one) would answer "unseen" for every key.
-    Either way already-seen URLs must not be fetched again."""
-    from xcrawl3r_spark.config import CrawlConfig
-    from xcrawl3r_spark.plans.crawl import Crawler
-    from xcrawl3r_spark.sources import datagen as G
-
-    params = G.GraphParams(hosts=3, pages_per_host=6)
-    seeds = G.seeds_df(spark, params, 3)
-    pages = G.pages_df(spark, params, distributed=False)
-    base = dict(domains=["test"], include_subdomains=True, depth=0,
-                parallelism=0)
-    res1 = Crawler(spark, CrawlConfig(
-        **base, filter_kind=first_kind, bloom_partitions=8,
-        bloom_bits=1 << 14, cuckoo_buckets=1 << 10)).crawl(seeds, pages)
-    first_seen = {(r["seed_id"], r["url"]) for r in res1.seen.collect()}
-
-    c2 = Crawler(spark, CrawlConfig(
-        **base, filter_kind="bloom", bloom_partitions=4,
-        bloom_bits=second_bits))
-    handed = res1.seen_filter.empty() if uncovering else res1.seen_filter
-    res2 = c2.crawl(seeds, pages, initial_seen=res1.seen,
-                    initial_filter=handed,
-                    start_iteration=res1.iterations + 1)
-    again = {(r["seed_id"], r["url"]) for r in res2.seen.filter(
-        f"iter > {res1.iterations}").collect()}
-    assert not again & first_seen
-    # the filter kept its own kind and geometry through the second crawl
-    first = res1.seen_filter
-    assert first.kind == first_kind and first.partitions == 8 and first.tables
-    assert (res2.seen_filter.kind, res2.seen_filter.partitions,
-            res2.seen_filter.geometry) == (
-        first.kind, first.partitions, first.geometry)
-    # expiry follows the filter's kind too, not c2's config
-    _, expired = c2.expire_seen(res1.seen, first, before_iter=2)
-    assert (expired.kind, expired.geometry) == (first.kind, first.geometry)

@@ -98,6 +98,21 @@ def test_seen_filter_refuses_foreign_geometry():
         a.delete(np.array([1, 2], dtype=np.int64))
 
 
+def test_seen_filter_rejects_bad_geometry():
+    """Geometry fails at construction, not later inside an executor fold
+    (bits=100 died there with an IndexError; partitions=0 put every key in
+    one partition). Each message names the parameter at fault."""
+    for kind, partitions, geometry, name in (
+            ("bloom", 1, (100, 1), "bits"), ("bloom", 1, (0, 1), "bits"),
+            ("bloom", 1, (-8, 1), "bits"), ("bloom", 0, (8, 1), "partitions"),
+            ("bloom", 1, (8, 0), "hashes"), ("cuckoo", 1, (0,), "buckets"),
+            ("Bloom", 1, (8, 1), "kind")):
+        with pytest.raises(ValueError, match=f"^{name} must"):
+            SeenFilter(kind, partitions, geometry)
+    SeenFilter("bloom", 1, (8, 1))
+    SeenFilter("cuckoo", 1, (1,))
+
+
 def test_ivf_topk_recall_and_exactness(spark, sf_dir):
     """IVF ANN: deterministic, k rows per query, returned cosines equal
     the exact scores for those pairs, and recall@10 vs brute force beats

@@ -18,7 +18,7 @@ def test_streaming_seed_replay(spark, tmp_path):
 
     cfg = CrawlConfig(
         domains=["test"], include_subdomains=True, depth=1,
-        global_dedup=True, bloom_enabled=False,
+        global_dedup=True,
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
     pages = G.pages_df(spark, P, distributed=False)

@@ -2,14 +2,14 @@
 
 Mirrors the reference's ``xcrawl3r.Configuration``
 (pkg/xcrawl3r/xcrawl3r.go:366-376) plus the batch engine's own knobs:
-fetch mode, dedup scope, robots enforcement, the result's seen-filter
-geometry, skew salting, image ingest, snapshot checkpointing and frontier
-range buckets. Defaults follow internal/configuration/configuration.go:95-110.
+fetch mode, dedup scope, robots enforcement, skew salting, image ingest,
+snapshot checkpointing and frontier range buckets. Defaults follow
+internal/configuration/configuration.go:95-110.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import InitVar, dataclass, field
 
 #: mirrors the reference's configuration.VERSION
 #: (internal/configuration/configuration.go:64) — the value its
@@ -19,8 +19,10 @@ CONFIG_VERSION = "1.2.0"
 #: fields removed from CrawlConfig that ``create_or_update`` wrote into
 #: every scaffold before their removal; ``from_yaml`` drops them so those
 #: files keep loading (any other unknown key still errors)
-RETIRED_KEYS = frozenset({"bucketed_seen", "iceberg_catalog",
-                          "iceberg_namespace", "shuffle_partitions"})
+RETIRED_KEYS = frozenset({
+    "bucketed_seen", "iceberg_catalog", "iceberg_namespace",
+    "shuffle_partitions", "bloom_enabled", "filter_kind", "bloom_partitions",
+    "bloom_bits", "bloom_hashes", "cuckoo_buckets"})
 
 #: spellings a boolean XCRAWL3R_* variable accepts (case-insensitive);
 #: any other value raises rather than silently reading as False
@@ -97,24 +99,6 @@ class CrawlConfig:
     #: enforce robots.txt allow/deny (north rule; the reference only MINES
     #: robots for URLs and ignores its rules, xcrawl3r.go:272)
     obey_robots: bool = False
-    #: whether CrawlResult.seen_filter carries a probabilistic filter over
-    #: every seen key (folded on first read; the crawl loop itself only
-    #: runs the exact seen anti-join)
-    bloom_enabled: bool = True
-    #: kind of that filter: "bloom" (append-only, densest) or "cuckoo"
-    #: (deletable — windowed seen-sets / TTL re-crawl via expire_seen;
-    #: operators/cuckoo.py). Both are hash-range partitioned and
-    #: property-tested for zero false negatives.
-    filter_kind: str = "bloom"
-    #: cuckoo buckets per partition (x4 slots each)
-    cuckoo_buckets: int = 1 << 15
-    #: Bloom partitions (hash-range split of the seen set; each partition
-    #: has its own bitset so 10^10-scale seen sets never need one giant
-    #: broadcast)
-    bloom_partitions: int = 8
-    #: bits per partition bitset (sized for ~1% FPR at expected load)
-    bloom_bits: int = 1 << 20
-    bloom_hashes: int = 7
     #: salt buckets for hot-host skew: politeness_flag's two-phase top-k
     #: ranks per (seed, host, pmod(url_hash, skew_salt)) bucket first
     skew_salt: int = 8
@@ -133,21 +117,18 @@ class CrawlConfig:
     #: when per-iteration frontiers reach ~10^7+ rows, where bounded
     #: buckets matter and the sampling cost amortizes
     frontier_range_partitions: int | None = 0
+    #: retired (RETIRED_KEYS); accepted and ignored so that callers still
+    #: passing it keep working. An InitVar, not a field: fields(),
+    #: asdict() and the scaffold never see it
+    bloom_enabled: InitVar[bool | None] = None
 
-    def __post_init__(self) -> None:
+    def __post_init__(self, bloom_enabled: bool | None) -> None:
         # free-string mode knobs fail fast: fetch_mode='HTTP' (or a typo)
         # would otherwise silently crawl the deterministic pages-join test
         # double instead of the network
         if self.fetch_mode not in ("table", "http"):
             raise ValueError(
                 f"fetch_mode must be 'table' or 'http', got {self.fetch_mode!r}")
-        # filter_kind and the seen-filter geometry are checked where the
-        # geometry is defined (SeenFilter) — every kind's, so switching
-        # filter_kind later cannot reach an unchecked size
-        from xcrawl3r_spark.operators.dedup import SeenFilter
-
-        for kind in (self.filter_kind, *SeenFilter.KINDS):
-            SeenFilter.for_config(self, kind)
 
     @classmethod
     def create_or_update(cls, path: str) -> None:

@@ -25,11 +25,11 @@ here:
 The crawl loop (plans/crawl.py) does not use the filter: its membership
 test is the plain exact anti-join, because per-wave BFS batches gave the
 probe no measured win (a filter pays for membership over a window far
-larger than one wave). With ``bloom_enabled`` a crawl result still carries
-a filter over every seen key, folded once when it is first read, for
-windowed re-crawls (``expire_seen``) and for callers that probe it. At
-10^10 scale each partition table stays ≤ a few hundred MB and partitions
-are probed independently (no single giant broadcast).
+larger than one wave). ``anti_join_seen(seen_filter=...)`` is exercised by
+the ``d1_bloom_anti_join`` / ``d1_cuckoo_anti_join`` queries
+(__spark_entry__.py). At 10^10 scale each partition table stays ≤ a few
+hundred MB and partitions are probed independently (no single giant
+broadcast).
 """
 
 from __future__ import annotations
@@ -114,8 +114,6 @@ class SeenFilter:
     filter of another geometry. build/merge/delete return new filters.
     """
 
-    KINDS = tuple(_TABLES)
-
     kind: str
     partitions: int
     geometry: tuple[int, ...]
@@ -127,30 +125,21 @@ class SeenFilter:
         # multiple of 8) or put every key in one partition (P = 0)
         if self.kind not in _TABLES:
             raise ValueError(
-                f"filter_kind must be 'bloom' or 'cuckoo', got {self.kind!r}")
+                f"kind must be 'bloom' or 'cuckoo', got {self.kind!r}")
         if self.partitions < 1:
             raise ValueError(
-                f"bloom_partitions must be >= 1, got {self.partitions}")
+                f"partitions must be >= 1, got {self.partitions}")
         if self.kind == "bloom":
             bits, hashes = self.geometry
             if bits < 8 or bits % 8:
                 raise ValueError(
-                    f"bloom_bits must be a positive multiple of 8, got {bits}")
+                    f"bits must be a positive multiple of 8, got {bits}")
             if hashes < 1:
-                raise ValueError(f"bloom_hashes must be >= 1, got {hashes}")
+                raise ValueError(f"hashes must be >= 1, got {hashes}")
         else:
             (buckets,) = self.geometry
             if buckets < 1:
-                raise ValueError(f"cuckoo_buckets must be >= 1, got {buckets}")
-
-    @classmethod
-    def for_config(cls, cfg, kind: str | None = None) -> "SeenFilter":
-        """An empty filter of ``kind`` (default ``cfg.filter_kind``) with
-        the config's geometry."""
-        kind = kind or cfg.filter_kind
-        geometry = ((cfg.bloom_bits, cfg.bloom_hashes) if kind == "bloom"
-                    else (cfg.cuckoo_buckets,))
-        return cls(kind, cfg.bloom_partitions, geometry)
+                raise ValueError(f"buckets must be >= 1, got {buckets}")
 
     def empty(self) -> "SeenFilter":
         """Same kind and geometry, no keys."""

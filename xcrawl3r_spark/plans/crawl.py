@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from xcrawl3r_spark.config import CrawlConfig
 from xcrawl3r_spark.functions import urls as U
-from xcrawl3r_spark.operators.dedup import SeenFilter, anti_join_seen
+from xcrawl3r_spark.operators.dedup import anti_join_seen
 from xcrawl3r_spark.operators.extract import extract_links
 from xcrawl3r_spark.operators.politeness import (
     collapse_robots_rules,
@@ -119,28 +119,6 @@ class CrawlResult:
     #: live image GETs), ``rows_extracted`` (in-scope emits + visits) and
     #: ``rows_frontier_next`` (the next iteration's frontier)
     metrics: list[dict] = field(default_factory=list)
-    #: the filter the crawl started from, and the seen-key frames not
-    #: folded into it yet (see ``seen_filter``)
-    _filter: SeenFilter | None = field(default=None, repr=False)
-    _filter_pending: list[DataFrame] = field(default_factory=list, repr=False)
-
-    @property
-    def seen_filter(self) -> SeenFilter | None:
-        """A probabilistic filter over every seen key, or None with
-        bloom_enabled off. It takes no part in the crawl (the loop's
-        membership test is the exact anti-join); it is built for callers
-        such as expire_seen() and crawl(initial_filter=...), folded on
-        first read, once: ``initial_filter`` (or a fresh filter over
-        ``initial_seen``) plus the keys this run marked seen. A caller
-        that never reads it never pays for the fold. Self-describing: it
-        carries its kind and geometry, so any Crawler probes and extends
-        it with the geometry that built it."""
-        if self._filter is not None and self._filter_pending:
-            self._filter = self._filter.build(_union(
-                [df.select("dedup_key") for df in self._filter_pending]),
-                key="dedup_key")
-            self._filter_pending = []
-        return self._filter
 
 
 class Crawler:
@@ -236,13 +214,10 @@ class Crawler:
         return self._with_keys(exploded).select(*FRONTIER_COLS)
 
     # -- TTL / windowed seen-set (re-crawl support) ----------------------
-    def expire_seen(
-        self, seen: DataFrame, filt: SeenFilter | None,
-        before_iter: int, max_expired_collect: int = 5_000_000,
-    ) -> tuple[DataFrame, SeenFilter | None]:
+    def expire_seen(self, seen: DataFrame, before_iter: int) -> DataFrame:
         """Windowed seen-set: drop rows first visited before
-        ``before_iter`` so a follow-up ``crawl(initial_seen=...,
-        initial_filter=...)`` re-visits them (TTL re-crawl).
+        ``before_iter`` so a follow-up ``crawl(initial_seen=...)``
+        re-visits them (TTL re-crawl).
 
         CONTRACT: the follow-up ``crawl(initial_seen=surviving, ...)``
         must pass ``start_iteration`` greater than the expired run's last
@@ -251,28 +226,8 @@ class Crawler:
         OLDER than the surviving rows, so a second expire_seen cycle
         would expire the most recently visited URLs and keep the stalest
         — the inverse of a TTL window.
-
-        The filter's own kind decides, not this Crawler's config: a
-        cuckoo filter has the expired keys DELETED incrementally (the
-        capability the cuckoo fallback exists for — Bloom bits cannot be
-        unset). The expired-key batch is driver-applied, bounded by the
-        expiry window (one TTL quantum of URLs, NOT the lifetime seen
-        set); ``max_expired_collect`` guards the bound — beyond it (or
-        with Bloom) the filter is rebuilt distributed from the surviving
-        rows instead, with its own geometry.
         """
-        surviving = seen.filter(F.col("iter") >= before_iter)
-        if filt is None:
-            return surviving, None
-        expired = seen.filter(F.col("iter") < before_iter).select("dedup_key")
-        if filt.kind == "cuckoo" and expired.count() <= max_expired_collect:
-            import numpy as np
-
-            hashes = np.array(
-                [r["dedup_key"] for r in expired.collect()], dtype=np.int64)
-            return surviving, filt.delete(hashes)
-        # Bloom (no deletes) or over-bound cuckoo window: distributed rebuild
-        return surviving, filt.empty().build(surviving, key="dedup_key")
+        return seen.filter(F.col("iter") >= before_iter)
 
     # -- the BFS loop ----------------------------------------------------
     def crawl(
@@ -285,7 +240,6 @@ class Crawler:
         initial_frontier: DataFrame | None = None,
         initial_seen: DataFrame | None = None,
         initial_robots_rules: DataFrame | None = None,
-        initial_filter: SeenFilter | None = None,
         max_iterations: int = 1000,
         on_iteration: "Callable[[int, DataFrame], None] | None" = None,
     ) -> CrawlResult:
@@ -320,20 +274,6 @@ class Crawler:
         SEEN_COLLAPSE_EVERY = 8
         seen = _ckpt(initial_seen) if initial_seen is not None else None
         seen_parts = 0 if seen is None else 1
-
-        # The seen-filter takes no part in the loop. With bloom_enabled
-        # the result carries one, folded on its first read from these
-        # frames: ``initial_filter`` (e.g. from expire_seen's incremental
-        # cuckoo delete) keeps its own kind and geometry and is trusted
-        # to hold initial_seen; a fresh filter gets initial_seen folded.
-        seen_filter: SeenFilter | None = None
-        fold_keys: list[DataFrame] = []
-        if cfg.bloom_enabled:
-            seen_filter = initial_filter
-            if seen_filter is None:
-                seen_filter = SeenFilter.for_config(cfg)
-                if seen is not None:
-                    fold_keys.append(seen)
 
         # None -> mined from fetched robots bodies; a resumed run restores
         # the rules mined by its completed iterations (bit-identity)
@@ -631,8 +571,6 @@ class Crawler:
             if seen_parts >= SEEN_COLLAPSE_EVERY:
                 seen = _ckpt(seen)
                 seen_parts = 1
-            if seen_filter is not None:
-                fold_keys.append(seen_it)
             edges_parts.append(edges_it)
             images_parts.append(images_it)
             if payload_errors_it is not None:
@@ -676,8 +614,6 @@ class Crawler:
             errors=cat(errors_parts, "errors"),
             iterations=it - start_iteration,
             metrics=metrics,
-            _filter=seen_filter,
-            _filter_pending=fold_keys,
         )
 
     def resume(
@@ -722,7 +658,6 @@ class Crawler:
         edges = self.store.read("edges")
         images = self.store.read("images")
         errors = self.store.read("errors")
-        # the tail's seen-filter passes through unfolded
         return replace(
             res,
             edges=edges if edges is not None else res.edges,

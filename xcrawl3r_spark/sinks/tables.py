@@ -7,6 +7,11 @@ JSON manifest:
     <base>/<table>/data/iter=<k>/ part-*.parquet      (one commit per iter)
     <base>/<table>/_manifest.json                      (atomic rename)
 
+A manifest names each commit's data directory relative to its table
+directory, so a moved or copied checkpoint directory reads its own files.
+Manifests written with absolute paths still read (``os.path.join`` keeps
+an absolute entry as it is).
+
 Commit protocol: write data dir -> write manifest.tmp -> os.replace()
 (atomic on POSIX). A killed run leaves either the old manifest (commit
 invisible -> iteration re-runs deterministically) or the new one (commit
@@ -37,6 +42,9 @@ class SnapshotStore:
     def _tdir(self, table: str) -> str:
         return os.path.join(self.base, table)
 
+    def _data_path(self, table: str, commit: dict) -> str:
+        return os.path.join(self._tdir(table), commit["path"])
+
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self._tdir(table), "_manifest.json")
 
@@ -64,7 +72,8 @@ class SnapshotStore:
 
     def _publish(self, table: str, iteration: int, data_dir: str) -> None:
         m = self.manifest(table)
-        m["commits"].append({"iter": iteration, "path": data_dir, "meta": {}})
+        path = os.path.relpath(data_dir, self._tdir(table))
+        m["commits"].append({"iter": iteration, "path": path, "meta": {}})
         tmp = self._manifest_path(table) + ".tmp"
         os.makedirs(self._tdir(table), exist_ok=True)
         with open(tmp, "w") as f:
@@ -112,7 +121,8 @@ class SnapshotStore:
             commits = [c for c in commits if c["iter"] <= upto]
         if not commits:
             return None
-        paths = [c["path"] for c in sorted(commits, key=lambda c: c["iter"])]
+        paths = [self._data_path(table, c)
+                 for c in sorted(commits, key=lambda c: c["iter"])]
         return self.spark.read.parquet(*paths)
 
     def read_iteration(self, table: str, iteration: int,
@@ -125,5 +135,5 @@ class SnapshotStore:
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(commits[0]["path"])
+        return reader.parquet(self._data_path(table, commits[0]))
 
