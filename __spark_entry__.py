@@ -1400,7 +1400,10 @@ def q_image_display_dims(spark, sf_dir):
 # 100, 1, 255)) — the operator inverts them. Variants: %11 no payload,
 # %13 not JPEG, %19 no DQT at all (walk must reach SOS -> definitive
 # false), %17 a 16-bit-precision table (present, no estimate), %7==3 a
-# COM segment before the DQT (walk must hop). All arithmetic is
+# COM segment before the DQT (walk must hop); the first 8 values are all
+# 0 on %23 rows (invalid per T.81: no estimate), all 255 on %29 rows
+# (quality 2, the low bound) and all 1 on %31 rows (96, the high
+# bound). All arithmetic is
 # engine-parameterized integer division so Spark and DuckDB synthesize
 # bit-identical payloads.
 _DQT_SOF_SOS_HEX = ("'FFC00011080064006403011100021101031101', "
@@ -1414,8 +1417,10 @@ def _dqt_payload_hex(idiv: str) -> str:
     s = (f"(case when {q} < 50 then 5000 {idiv} {q} "
          f"else 200 - 2 * {q} end)")
     vals = ", ".join(
-        f"printf('%02X', greatest(1, least(255, "
-        f"({b} * {s} + 50) {idiv} 100)))" for b in DQT_ZIGZAG_BASE8)
+        "case when doc_id % 23 = 0 then '00' "
+        "when doc_id % 29 = 0 then 'FF' when doc_id % 31 = 0 then '01' "
+        f"else printf('%02X', greatest(1, least(255, "
+        f"({b} * {s} + 50) {idiv} 100))) end" for b in DQT_ZIGZAG_BASE8)
     dqt8 = f"concat('FFDB004300', {vals}, repeat('40', 56))"
     dqt16 = "concat('FFDB008310', repeat('0100', 64))"
     return (
@@ -1894,7 +1899,8 @@ def _duck_animation_sql(gif_steps: int = 6, png_chunks: int = 4) -> str:
     """DuckDB twin of operators/images.py animation_probe: the GIF and
     PNG walk twins (same step snippets as their standalone oracles, at
     the composite's reduced budgets) joined with the sniff + VP8X
-    animation-bit dispatch."""
+    animation-bit dispatch. A GIF walk that uses up its steps still
+    positioned reads -1 (unknown) through ``g.gif_animated``."""
     table_sql = (
         f"select concat('img-', doc_id) as image_id, "
         f"case when doc_id % 11 = 0 then null "
@@ -2100,6 +2106,9 @@ def q_image_png_scan(spark, sf_dir):
 # fixed-position check probed false on, r4 ADVICE); ANIMEXTS flavor on
 # %5 rows. Static rows (%3==0) get a graphic-control block before the
 # image descriptor on %4==1 rows — the walk must still answer false.
+# %8==4 rows carry both pre-blocks too: they are the animation fixture's
+# GIF rows, where that layout uses up image_animation's 6-step walk
+# still positioned on the loop extension — unknown (-1), not still.
 # %13 non-GIF, %11 NULL.
 _GIF_SIZES = "case doc_id % 3 when 0 then 6 when 1 then 12 else 24 end"
 _GIF_APP = ("case when doc_id % 5 = 0 then '414E494D45585453312E30' "
@@ -2109,7 +2118,9 @@ _GIF_COMMENT = "'21FE03', '616263', '00'"     # comment ext, 3 data bytes
 _GIF_PREBLOCKS = (
     f"case doc_id % 4 when 1 then concat({_GIF_GCE}) "
     f"when 2 then concat({_GIF_COMMENT}) "
-    f"when 3 then concat({_GIF_GCE}, {_GIF_COMMENT}) else '' end")
+    f"when 3 then concat({_GIF_GCE}, {_GIF_COMMENT}) "
+    f"when 0 then (case when doc_id % 8 = 4 "
+    f"then concat({_GIF_GCE}, {_GIF_COMMENT}) else '' end) end")
 _GIF_SYNTH_HEX = (
     f"concat('474946383961', {_le_hex_sql(_HDR_W, 2)}, "
     f"{_le_hex_sql(_HDR_H, 2)}, "
@@ -2177,8 +2188,8 @@ def _duck_gif_probe_sql(table_sql: str, steps: int = 8) -> str:
             f"{s['next_sub']} as b{i + 1} from s{i})")
     return ("with " + ", ".join(ctes)
             + " select image_id, "
-              "case when is_gif then "
-              "(case when coalesce(anim, false) then 1 else 0 end) "
+              "case when is_gif and coalesce(anim, false) then 1 "
+              f"when is_gif and p{steps} is null then 0 "
               "else -1 end as gif_animated, "
               "cast(case when coalesce(anim, false) then lp else -1 end "
               f"as bigint) as gif_loop_count from s{steps}")

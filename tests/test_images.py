@@ -1256,6 +1256,37 @@ class TestGifAnimProbe:
         assert got["static-gce"] == (False, None)
         assert got["frames-first"] == (False, None)
 
+    def test_walk_out_of_steps_is_unknown(self, spark):
+        """A walk that uses up max_steps still positioned on a block
+        answers NULL, never still: a graphic-control block plus a
+        comment cost 6 steps, so at 6 the NETSCAPE block behind them is
+        never checked (animation_probe's budget) and at 8 it is found.
+        A still GIF whose walk ends inside the budget stays false."""
+        from xcrawl3r_spark.operators.images import (
+            animation_probe, gif_anim_probe)
+
+        df = spark.createDataFrame(
+            [("gce-comment", _gif_file(anim=5, pre=_GIF_GCE + _GIF_COMMENT)),
+             ("static-gce", _gif_file(pre=_GIF_GCE)),
+             ("static-gce-comment",
+              _gif_file(pre=_GIF_GCE + _GIF_COMMENT))],
+            "image_id string, bytes binary")
+
+        def probe(steps):
+            return {r["image_id"]: (r["gif_animated"], r["gif_loop_count"])
+                    for r in gif_anim_probe(df, max_steps=steps).collect()}
+
+        assert probe(6) == {"gce-comment": (None, None),
+                            "static-gce": (False, None),
+                            "static-gce-comment": (None, None)}
+        assert probe(8) == {"gce-comment": (True, 5),
+                            "static-gce": (False, None),
+                            "static-gce-comment": (False, None)}
+        got = {r["image_id"]: r["is_animated"]
+               for r in animation_probe(df).collect()}
+        assert got == {"gce-comment": None, "static-gce": False,
+                       "static-gce-comment": None}
+
     def test_zero_shuffle(self, spark):
         from xcrawl3r_spark.operators.images import gif_anim_probe
 
@@ -1532,6 +1563,23 @@ class TestJpegQualityEstimate:
         assert got["prec16"] == (True, None, None)
         assert got["not-jpeg"] == (None, None, None)
         assert got["nulls"] == (None, None, None)
+
+    def test_all_zero_table_is_null_and_valid_tables_bounded(self, spark):
+        """An all-zero table (invalid per T.81) has no quality: NULL,
+        not 100. Valid 8-bit tables span quality 2 (every value 255)
+        to 96 (every value 1)."""
+        from xcrawl3r_spark.operators.images import jpeg_quality_estimate
+
+        df = spark.createDataFrame(
+            [(name, b"\xFF\xD8" + _dqt_seg(values=[v] * 8) + _JSOS)
+             for name, v in (("zeros", 0), ("all-255", 255), ("all-1", 1))],
+            "image_id string, bytes binary")
+        got = {r["image_id"]: (r["dqt_present"], r["dqt_sum"],
+                               r["jpeg_quality_est"])
+               for r in jpeg_quality_estimate(df).collect()}
+        assert got["zeros"] == (True, 0, None)
+        assert got["all-255"] == (True, 2040, 2)
+        assert got["all-1"] == (True, 8, 96)
 
     def test_budget_and_zero_shuffle(self, spark):
         from xcrawl3r_spark.operators.images import jpeg_quality_estimate

@@ -1612,13 +1612,16 @@ def dqt_quality_sql(sum_q: str, idiv: str = "div",
     Spark, '//' on DuckDB — identical for non-negatives), so both
     engines produce bit-identical estimates; accumulated per-value
     floor error bounds the estimate within ~±2 quality points
-    mid-range (pytest-pinned against the forward formula)."""
+    mid-range (pytest-pinned against the forward formula). A valid
+    8-bit table (every q_i in 1..255) gives S 7..1942 over the 8-value
+    base (sum 105), so quality 2..96; S <= 0 only for an all-zero
+    table, invalid per T.81, which estimates NULL."""
     sum_base = sum(DQT_ZIGZAG_BASE8[:int(n_coeffs)])
     s_est = f"((100 * ({sum_q})) {idiv} {sum_base})"
     return {
         "scale_est": s_est,
         "quality_est": (
-            f"(case when {s_est} <= 0 then 100 "
+            f"(case when {s_est} <= 0 then null "
             f"when {s_est} >= 100 then 5000 {idiv} {s_est} "
             f"else (200 - {s_est}) {idiv} 2 end)"),
     }
@@ -1647,8 +1650,9 @@ def jpeg_quality_estimate(
     dqt_present (true = DQT seen; false = SOS reached with no DQT, the
     only definitive negative; NULL = non-JPEG / window or budget
     exhausted), dqt_sum (sum of the first ``n_coeffs`` zigzag values,
-    NULL for 16-bit-precision tables), and jpeg_quality_est (1-100,
-    NULL when no 8-bit table parsed)."""
+    NULL for 16-bit-precision tables), and jpeg_quality_est (2-96 for
+    a valid 8-bit table, see :func:`dqt_quality_sql`; NULL when no
+    8-bit table parsed or the table is all zero)."""
     hx = "_jq_hx"
     out = (
         images.withColumn(
@@ -2181,7 +2185,8 @@ def gif_anim_probe(
     single fixed-position check missed (r4 ADVICE).
 
     Zero shuffle, no UDF, first ``scan_bytes`` bytes only. Appends
-    (gif_animated — NULL for non-GIF payloads, gif_loop_count — only
+    (gif_animated — NULL for non-GIF payloads and for a walk that used
+    up ``max_steps`` still positioned on a block, gif_loop_count — only
     for animated rows)."""
     hx = "_gifx_hx"
     st = gif_start_sql(hx=hx)
@@ -2214,8 +2219,11 @@ def gif_anim_probe(
     return (
         out.withColumn(
             "gif_animated",
-            F.expr(f"case when {st['is_gif']} "
-                   "then coalesce(_ganim, false) end"))
+            # still only when the walk ended (_gif{max_steps} NULL): a
+            # walk still positioned after max_steps is unknown, not still
+            F.expr(f"case when {st['is_gif']} then coalesce(_ganim, "
+                   f"case when _gif{int(max_steps)} is null then false "
+                   "end) end"))
         .withColumn("gif_loop_count", F.col("_gloop"))
         .drop(hx, "_ganim", "_gloop",
               *[f"_gif{i}" for i in range(int(max_steps) + 1)],
@@ -2246,6 +2254,8 @@ def animation_probe(
     - unsniffable/NULL payloads: NULL (unknown, not still).
 
     The two walks run at REDUCED budgets (6 GIF steps, 4 PNG chunks)
+    — a graphic-control block plus a short comment use up the 6 GIF
+    steps, so such a GIF reads NULL (unknown), never still —
     because both unrolled walks fuse into one projection stage:
     janino's 64 KB whole-stage-codegen method limit is the binding
     constraint, exactly as in :func:`display_dims` (verified by
