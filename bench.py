@@ -293,13 +293,12 @@ def _one_replay(spark, p):
         urls.unionByName(urls)  # 2x duplication exercises within-batch dedup
         .withColumn("depth", F.lit(1))
     )
-    from xcrawl3r_spark.plans.crawl import _ckpt
+    from xcrawl3r_spark.plans.crawl import FRONTIER_COLS, _ckpt
 
-    frontier = _ckpt(c._with_keys(frontier.withColumn(
-        "disc_iter", F.lit(0))).select(
-        "seed_id", "url", "url_hash", "dedup_key", "host", "depth",
-        "disc_iter"
-    ))
+    frontier = _ckpt(c._with_keys(
+        frontier.withColumn("disc_iter", F.lit(0))
+        .withColumn("src_url", F.lit(None).cast("string"))
+    ).select(*FRONTIER_COLS))
     n_frontier = frontier.count()
     seeds = spark.createDataFrame([], "seed_id string, url string")
     t0 = time.perf_counter()

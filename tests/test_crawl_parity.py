@@ -14,7 +14,7 @@ from collections import Counter
 import pytest
 
 from xcrawl3r_spark.config import CrawlConfig
-from xcrawl3r_spark.plans.crawl import Crawler
+from xcrawl3r_spark.plans.crawl import WAVE_TABLES, Crawler
 from xcrawl3r_spark.simulator import simulate_crawl
 from xcrawl3r_spark.sources import datagen as G
 
@@ -177,7 +177,8 @@ def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
     """The loop decides to go on from counts observed on its own
     checkpoints (no isEmpty() job), and those counts are the per-wave
     ``rows_*`` metrics: the seen rows sum to the seen set, and each
-    wave's rows_frontier_next is the size of the frontier it committed."""
+    wave's rows_frontier_next is the size of the frontier view over
+    the frames it committed."""
     from pyspark.sql import DataFrame
 
     def no_probe(self):
@@ -199,8 +200,8 @@ def test_loop_counts_replace_frontier_probe(spark, tmp_path, monkeypatch):
     assert sum(m["rows_seen"] for m in res.metrics) == res.seen.count()
     assert any(m["rows_overflow"] for m in res.metrics)  # budget bit
     for m in res.metrics:
-        committed = crawler.store.read_iteration("frontier", m["iter"])
-        assert m["rows_frontier_next"] == committed.count()
+        wave = {t: crawler.store.read(t, m["iter"]) for t in WAVE_TABLES}
+        assert m["rows_frontier_next"] == crawler._frontier(wave).count()
         assert m["rows_new"] >= m["rows_seen"] + m["rows_overflow"]
     assert res.metrics[-1]["rows_frontier_next"] == 0
 

@@ -389,6 +389,46 @@ def test_payload_fetch_budget_defers_to_next_iteration(spark, http_site):
         restore()
 
 
+def test_payload_budget_resume_fetches_each_image_once(
+        spark, http_site, tmp_path):
+    """A checkpointed live crawl with deferred image GETs, interrupted
+    after wave 2 and resumed: every image is GET exactly once across both
+    runs, and seen/images/errors equal an uninterrupted run's. An image
+    deferred in wave 2 and fetched in wave 3 is seen in wave 3: the
+    committed deferrals key on (iter, dedup_key), not on the URL alone."""
+    restore, _ = _png_route()
+
+    def rows(df):
+        return Counter(tuple(sorted((k, v) for k, v in r.asDict().items()
+                                    if k != "part_id"))
+                       for r in df.collect())
+
+    def image_gets():
+        return sorted(p for p, _ in _Handler.requests if p.startswith("/i/"))
+
+    try:
+        imgs = "".join(f'<img src="{http_site}/i/n{i}.png">' for i in range(5))
+        _Handler.site = {"/p/0": ("text/html", imgs, 200)}
+        seeds = spark.createDataFrame(
+            [("s0", f"{http_site}/p/0")], "seed_id string, url string")
+        full = Crawler(spark, _cfg(parallelism=2)).crawl(seeds)
+        assert full.iterations > 3
+        want = {part: rows(getattr(full, part))
+                for part in ("seen", "images", "errors")}
+        assert image_gets() == [f"/i/n{i}.png" for i in range(5)]
+
+        _Handler.requests = []
+        cfg = _cfg(parallelism=2, checkpoint_dir=str(tmp_path / "ckpt"))
+        Crawler(spark, cfg).crawl(seeds, max_iterations=2)
+        assert len(image_gets()) == 2                 # wave 2's budget
+        res = Crawler(spark, cfg).resume(seeds, None)
+        assert image_gets() == [f"/i/n{i}.png" for i in range(5)]
+        for part, got in want.items():
+            assert rows(getattr(res, part)) == got, part
+    finally:
+        restore()
+
+
 def test_payload_deferral_keeps_other_seeds_copy_seen(spark, http_site):
     """Per-seed dedup: when one seed's GET of an image is deferred by the
     payload budget, another seed's fetched copy of the same URL is still

@@ -50,11 +50,11 @@ def test_kill_resume_bit_identity(spark, tmp_path):
     c1 = Crawler(spark, _cfg(ckpt))
     partial = c1.crawl(seeds, pages, max_iterations=2)
     assert partial.iterations == 2
-    assert c1.store.last_iteration("frontier") == 2
+    assert c1.store.last_iteration() == 2
 
-    # resume continues from the last committed frontier snapshot, read
-    # from wherever the checkpoint directory now lives: manifests name
-    # their data relative to the table directory
+    # resume continues from the last committed wave, read from wherever
+    # the checkpoint directory now lives: the manifest names its data
+    # relative to the checkpoint directory
     moved = tmp_path / "moved"
     shutil.move(ckpt, moved)
     c2 = Crawler(spark, _cfg(moved))
@@ -114,49 +114,43 @@ def test_resume_restores_mined_robots_rules(spark, tmp_path):
     assert _edges_ms(resumed.edges) == _edges_ms(full.edges)
 
 
-def test_commit_wave_crash_leaves_frontier_unpublished(
-        spark, tmp_path, monkeypatch):
-    """A wave's parts are written concurrently and the frontier manifest
-    is published last: when one part's write fails, the parts that
-    finished are committed, the frontier (resume's key) is not, and the
-    re-run writes only what is missing — the resumed output equals an
-    uninterrupted run."""
+def test_commit_wave_is_all_or_nothing(spark, tmp_path, monkeypatch):
+    """A wave's tables are written concurrently under one manifest entry:
+    when one write fails nothing of the wave is published, and the re-run
+    of the wave on resume gives an uninterrupted run's output."""
     from xcrawl3r_spark.sinks.tables import SnapshotStore
 
     seeds = G.seeds_df(spark, P, 2)
     pages = G.pages_df(spark, P, distributed=False)
     full = Crawler(spark, _cfg()).crawl(seeds, pages)
 
-    write = SnapshotStore._write_data
-    written = []
+    write = SnapshotStore._write
 
-    def failing_edges(self, df, table, iteration):
-        if (table, iteration) == ("edges", 2):
-            raise OSError("edges write failed")
-        return write(self, df, table, iteration)
-
-    def recording(self, df, table, iteration):
-        written.append((table, iteration))
+    def failing_extracted(self, df, table, iteration):
+        if (table, iteration) == ("extracted", 2):
+            raise OSError("extracted write failed")
         return write(self, df, table, iteration)
 
     ckpt = tmp_path / "ckpt"
     c1 = Crawler(spark, _cfg(ckpt))
-    monkeypatch.setattr(SnapshotStore, "_write_data", failing_edges)
-    with pytest.raises(OSError, match="edges write failed"):
+    monkeypatch.setattr(SnapshotStore, "_write", failing_extracted)
+    with pytest.raises(OSError, match="extracted write failed"):
         c1.crawl(seeds, pages)
-    assert c1.store.last_iteration("frontier") == 1
-    assert c1.store.last_iteration("edges") == 1
-    for table in ("seen", "images", "errors"):
-        assert c1.store.last_iteration(table) == 2
+    assert c1.store.last_iteration() == 1
+    assert [w["iter"] for w in c1.store.waves()] == [1]
+    for table in ("flagged", "extracted"):
+        assert c1.store.read(table, 2) is None   # written, not published
+        assert c1.store.read(table, 1) is not None
 
-    monkeypatch.setattr(SnapshotStore, "_write_data", recording)
+    monkeypatch.setattr(SnapshotStore, "_write", write)
     resumed = Crawler(spark, _cfg(ckpt)).resume(seeds, pages)
-    assert sorted(t for t, i in written if i == 2) == ["edges", "frontier"]
     assert _edges_ms(resumed.edges) == _edges_ms(full.edges)
     assert _seen_set(resumed.seen) == _seen_set(full.seen)
     for part in ("images", "errors"):
         assert _rows(getattr(resumed, part)) == _rows(getattr(full, part))
     assert resumed.iterations == full.iterations
+    assert [w["iter"] for w in c1.store.waves()] == list(
+        range(1, full.iterations + 1))
 
 
 def test_commit_idempotent(spark, tmp_path):
@@ -164,17 +158,34 @@ def test_commit_idempotent(spark, tmp_path):
 
     store = SnapshotStore(spark, str(tmp_path / "s"))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    store.commit_wave({"t": df}, 1)
+    store.commit_wave({"t": df, "u": df}, 1)
     store.commit_wave({"t": df}, 1)  # duplicate commit ignored
     assert store.read("t").count() == 2
     store.commit_wave({"t": df}, 2)
     assert store.read("t").count() == 4
-    assert store.read("t", upto=1).count() == 2
-    assert store.last_iteration("t") == 2
+    assert store.read("t", 1).count() == 2
+    assert store.read("u").count() == 2      # a table of wave 1 only
+    assert store.read("u", 2) is None and store.read("v") is None
+    assert store.last_iteration() == 2
     # a manifest written with absolute data paths still reads
-    manifest = tmp_path / "s" / "t" / "_manifest.json"
+    manifest = tmp_path / "s" / "waves" / "_manifest.json"
     m = json.loads(manifest.read_text())
-    for c in m["commits"]:
-        c["path"] = str(tmp_path / "s" / "t" / c["path"])
+    for w in m["commits"]:
+        w["tables"] = {t: str(tmp_path / "s" / p)
+                       for t, p in w["tables"].items()}
     manifest.write_text(json.dumps(m))
     assert store.read("t").count() == 4
+
+
+def test_old_layout_checkpoint_fails_clearly(spark, tmp_path):
+    """A checkpoint directory in the per-table layout (one _manifest.json
+    per table, no wave manifest) has no reader: resume() says so."""
+    ckpt = tmp_path / "old"
+    for table in ("seen", "frontier"):
+        (ckpt / table).mkdir(parents=True)
+        (ckpt / table / "_manifest.json").write_text(json.dumps(
+            {"commits": [{"iter": 1, "path": "data/iter=1", "meta": {}}]}))
+    crawler = Crawler(spark, _cfg(ckpt))
+    seeds = G.seeds_df(spark, P, 1)
+    with pytest.raises(ValueError, match="old per-table layout"):
+        crawler.resume(seeds, G.pages_df(spark, P, distributed=False))

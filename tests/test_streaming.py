@@ -26,9 +26,7 @@ def test_streaming_seed_replay(spark, tmp_path):
     q = sc.start(str(seed_dir))
     q.awaitTermination(120)
 
-    store = sc.crawler.store
-    seen1 = store.read("seen")
-    assert seen1 is not None
+    seen1 = sc.crawler.committed().seen
     n1 = seen1.count()
     assert n1 > 0
     urls1 = {r["url"] for r in seen1.collect()}
@@ -39,7 +37,7 @@ def test_streaming_seed_replay(spark, tmp_path):
         f.write("https://h0.test/p/0\nhttps://h2.test/p/0\n")
     q2 = sc.start(str(seed_dir))
     q2.awaitTermination(120)
-    seen2 = store.read("seen")
+    seen2 = sc.crawler.committed().seen
     urls2 = [r["url"] for r in seen2.collect()]
     assert len(urls2) == len(set(urls2))      # no re-crawl of known URLs
     assert "https://h2.test/p/0" in set(urls2)

@@ -105,7 +105,7 @@ class CrawlConfig:
     #: route media-ext URLs (F3 deny-list) into the image-ingest branch
     #: instead of dropping them (north rule)
     ingest_images: bool = True
-    #: checkpoint directory for frontier/seen snapshots; None = no
+    #: checkpoint directory for the crawl waves' snapshots; None = no
     #: checkpointing (resume disabled)
     checkpoint_dir: str | None = None
     #: range-partitioned priority buckets for the frontier (north rule

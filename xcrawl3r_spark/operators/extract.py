@@ -11,6 +11,9 @@ emit-before-visit multiset semantics (pkg/xcrawl3r/xcrawl3r.go:117-122,
 148-153, 178-183; SURVEY §2.4 D3). The '.min.'-stripped variants of src
 URLs are returned as kind='minvisit' rows — visit-only: they feed the next
 frontier but are excluded from the edges output (xcrawl3r.go:194-205).
+A failed fetch (an input row with a non-NULL ``error``) passes through as
+one kind='error' row with NULL src_url, so a crawl's fetch output feeds
+this one stage for its links and its errors alike.
 """
 
 from __future__ import annotations
@@ -29,29 +32,38 @@ EXTRACT_SCHEMA = (
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["seed_id", "src_url", "url", "kind", "depth"]
+    cols = ["seed_id", "src_url", "url", "kind", "depth", "error"]
     for pdf in batches:
         rows = []
-        for seed_id, url, depth, ctype, body, is_file in zip(
+        errors = pdf["error"] if "error" in pdf else [None] * len(pdf)
+        for seed_id, url, depth, ctype, body, is_file, error in zip(
             pdf["seed_id"], pdf["url"], pdf["depth"], pdf["content_type"],
-            pdf["body"], pdf["is_file"],
+            pdf["body"], pdf["is_file"], errors,
         ):
+            if isinstance(error, str):
+                rows.append((seed_id, None, url, "error", depth, error))
+                continue
             if body is None:
                 continue
             for absu, kind in extract_occurrences(url, ctype, body, bool(is_file)):
-                rows.append((seed_id, url, absu, kind, depth))
+                rows.append((seed_id, url, absu, kind, depth, None))
                 if kind == "src":
                     mv = U.min_variant(absu)
                     if mv:
-                        rows.append((seed_id, url, mv, "minvisit", depth))
-        yield pd.DataFrame(rows, columns=cols)
+                        rows.append((seed_id, url, mv, "minvisit", depth, None))
+        out = pd.DataFrame(rows, columns=cols)
+        yield out if "error" in pdf else out.drop(columns="error")
 
 
 def extract_links(fetched: DataFrame) -> DataFrame:
-    """fetched(seed_id, url, depth, content_type, body, is_file) ->
-    occurrences(seed_id, src_url, url, kind, depth)."""
+    """fetched(seed_id, url, depth, content_type, body, is_file[, error])
+    -> occurrences(seed_id, src_url, url, kind, depth[, error])."""
     cols = ["seed_id", "url", "depth", "content_type", "body", "is_file"]
-    return fetched.select(*cols).mapInPandas(_extract_batches, EXTRACT_SCHEMA)
+    schema = EXTRACT_SCHEMA
+    if "error" in fetched.columns:
+        cols.append("error")
+        schema += ", error string"
+    return fetched.select(*cols).mapInPandas(_extract_batches, schema)
 
 
 def pages_to_documents(pages: DataFrame) -> DataFrame:

@@ -19,16 +19,21 @@ Per-iteration dataflow (SURVEY §3.4):
       frontier[i+1] = extracted ∪ overflow, depth-gated              A4
 
 Each iteration localCheckpoint()s its two wide frames, ``flagged`` and
-``extracted`` (breaks Catalyst lineage growth); everything else is a
-cheap lazy filter over them. The loop runs no job of its own to decide
-whether to go on: Observations on those checkpoints count the next
-frontier's rows (children within the depth limit + requeued overflow)
-while the checkpoint jobs run, and the same counts fill the ``rows_*``
-keys of ``CrawlResult.metrics``. With ``cfg.checkpoint_dir`` every
-iteration also commits frontier/seen/edges/images/errors snapshots
-through ``SnapshotStore.commit_wave`` (concurrent writes, frontier
-manifest last), and ``Crawler.resume()`` continues bit-identically
-from the last commit (deterministic data plane: no wall clock, no RNG).
+``extracted`` (breaks Catalyst lineage growth); failed fetches ride the
+``extracted`` checkpoint as ``kind='error'`` rows, so the fetch join
+runs once. Every crawl output — seen, edges, images, errors and the next
+frontier — is one view over a wave's frames (``Crawler._seen`` ...
+``_frontier``), the same for the loop, ``resume()`` and
+``StreamingCrawler``. The loop runs no job of its own to decide whether
+to go on: Observations on those checkpoints count the next frontier's
+rows (children within the depth limit + requeued overflow) while the
+checkpoint jobs run, and the same counts fill the ``rows_*`` keys of
+``CrawlResult.metrics``. With ``cfg.checkpoint_dir`` every iteration
+also commits the frames it checkpointed (``flagged``, ``extracted``,
+plus the live payload ranking and images and the mined robots rules
+where it makes them) as one all-or-nothing ``SnapshotStore.commit_wave``,
+and ``Crawler.resume()`` continues bit-identically from the last
+committed wave (deterministic data plane: no wall clock, no RNG).
 """
 
 from __future__ import annotations
@@ -53,13 +58,9 @@ from xcrawl3r_spark.operators.politeness import (
 )
 from xcrawl3r_spark.sinks.tables import SnapshotStore
 
-#: the frontier's columns. resume() reads a committed frontier with this
-#: schema: no footer-inference job, and snapshots from before the src_url
-#: column read it as NULL
-FRONTIER_SCHEMA = ("seed_id string, url string, url_hash bigint, "
-                   "dedup_key bigint, host string, depth int, disc_iter int, "
-                   "src_url string")
-FRONTIER_COLS = [c.split()[0] for c in FRONTIER_SCHEMA.split(", ")]
+#: the frontier's columns
+FRONTIER_COLS = ["seed_id", "url", "url_hash", "dedup_key", "host", "depth",
+                 "disc_iter", "src_url"]
 #: result schemas of a crawl that ran no iteration
 EMPTY_SCHEMAS = {
     "edges": "seed_id string, src_url string, url string, kind string, "
@@ -70,6 +71,14 @@ EMPTY_SCHEMAS = {
     "seen": "seed_id string, url string, url_hash bigint, dedup_key bigint, "
             "host string, depth int, iter int",
 }
+#: the frames a wave stores (``flagged`` and ``extracted`` always; the live
+#: payload ranking and images where the wave makes them) and every view
+#: reads; ``robots_rules`` is stored beside them
+WAVE_TABLES = ("flagged", "extracted", "ranked", "images")
+
+
+def _cols(key: str) -> list[str]:
+    return [c.split()[0] for c in EMPTY_SCHEMAS[key].split(", ")]
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -108,9 +117,10 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 
 @dataclass
 class CrawlResult:
+    # every field is a view over the waves' frames (see Crawler._seen)
     edges: DataFrame    # seed_id, src_url, url, kind, depth, iter
     seen: DataFrame     # seed_id, url, url_hash, dedup_key, host, depth, iter
-    images: DataFrame   # seed_id, url, iter
+    images: DataFrame   # seed_id, url, iter (+ decode/characterize columns)
     errors: DataFrame   # seed_id, url, error, stage, iter
     iterations: int = 0
     #: per-iteration phase timings (``t_*``, wall-clock seconds) and row
@@ -127,9 +137,18 @@ class Crawler:
 
         self.spark = spark
         ship_package(spark)  # workers need the package for UDF stages
-        self.cfg = cfg or CrawlConfig()
-        self.store = (SnapshotStore(spark, self.cfg.checkpoint_dir)
-                      if self.cfg.checkpoint_dir else None)
+        self.cfg = cfg = cfg or CrawlConfig()
+        self.store = (SnapshotStore(spark, cfg.checkpoint_dir)
+                      if cfg.checkpoint_dir else None)
+        # URL-class columns, built once per crawler rather than once per
+        # wave or view: each builder is a chain of driver->JVM calls
+        url = F.col("url")
+        self._in_scope = url.rlike(cfg.scope_pattern())
+        self._is_media, self._is_image = U.is_media_col(url), U.is_image_col(url)
+        self._is_file = U.is_file_col(url)
+        # children within the depth limit (A4) enter the next frontier
+        self._in_depth = (F.col("depth") + 1 <= cfg.depth if cfg.depth > 0
+                          else F.lit(True))
 
     # -- column helpers -------------------------------------------------
     def _dedup_key(self) -> F.Column:
@@ -244,24 +263,12 @@ class Crawler:
         on_iteration: "Callable[[int, DataFrame], None] | None" = None,
     ) -> CrawlResult:
         cfg, spark = self.cfg, self.spark
-        # URL-class columns, built once per crawl rather than once per
-        # wave: each builder is a chain of driver->JVM calls
-        url = F.col("url")
-        in_scope = url.rlike(cfg.scope_pattern())
-        is_media, is_image = U.is_media_col(url), U.is_image_col(url)
-        is_file = U.is_file_col(url)
-
         if initial_frontier is not None:
             frontier = initial_frontier
-            if "src_url" not in frontier.columns:
-                # frontiers built before the Referer column existed (old
-                # snapshots, replay harnesses) — no discovering page known
-                frontier = frontier.withColumn(
-                    "src_url", F.lit(None).cast("string"))
         else:
             # seeds pass through the same scope gate as everything else
             # (colly URLFilters applies to seed visits too, xcrawl3r.go:273)
-            frontier = self.seed_frontier(seeds).filter(in_scope)
+            frontier = self.seed_frontier(seeds).filter(self._in_scope)
         frontier, counted = _ckpt_counts(
             self._priority_buckets(frontier), rows=F.lit(True))
         frontier_rows = counted["rows"]
@@ -290,6 +297,11 @@ class Crawler:
             pages.withColumnRenamed("url", "page_url")
             if pages is not None else None
         )
+        # live-HTTP image GETs: the engine really fetches media payloads
+        live_payloads = (
+            image_payloads is None and cfg.fetch_mode == "http"
+            and cfg.ingest_images
+        )
         it = start_iteration
 
         while it <= max_iterations and frontier_rows > 0:
@@ -317,7 +329,7 @@ class Crawler:
             # they sort last, never take a budget slot, never select.
             if seen is not None:
                 cand = anti_join_seen(cand, seen, keys_unique=True)
-            new = cand.withColumn("_media", is_media)
+            new = cand.withColumn("_media", self._is_media)
             # robots enforcement (north rule, off by default). With no
             # rules table supplied, rules are mined from the robots.txt
             # bodies the crawl itself fetches (seed expansion E5 fetches
@@ -335,88 +347,23 @@ class Crawler:
             else:
                 flagged = new.withColumn("_elig", elig).withColumn("_sel", elig)
             flagged, counted = _ckpt_counts(
-                flagged, rows_new=F.lit(True),
+                flagged.withColumn("iter", F.lit(it)), rows_new=F.lit(True),
                 rows_seen=F.col("_sel") | F.col("_media"),
                 rows_overflow=F.col("_elig") & ~F.col("_sel"))
             m.update(counted)
+            w = {"flagged": flagged}
             FLAGS = ["_media", "_robots_ok", "_elig", "_sel"]
-            media = flagged.filter("_media").drop(*FLAGS)
-            selected = flagged.filter("_sel").drop(*FLAGS)
-            overflow = flagged.filter(F.col("_elig") & ~F.col("_sel")).drop(*FLAGS)
-            # requeued rows (same depth, just delayed) with their observed
-            # counts: each piece joins the next frontier AND its row count,
-            # which decides whether the loop goes on
-            requeue = [(overflow, counted["rows_overflow"])]
-            payload_errors_it: DataFrame | None = None
-            media_overflow: DataFrame | None = None
-            live_payloads = (
-                image_payloads is None and cfg.fetch_mode == "http"
-                and cfg.ingest_images
-            )
-            # robots applies to media too ONCE the engine really fetches
-            # them (live_payloads): denied image GETs are never issued —
-            # recorded in errors, still marked seen (scheduled-and-
-            # refused, like the reference's media abort). The table-join
-            # path keeps the original semantics (no real fetch happens).
-            if live_payloads and cfg.obey_robots:
-                media_fetchable = flagged.filter(
-                    F.col("_media") & F.col("_robots_ok")).drop(*FLAGS)
-                payload_errors_it = (
-                    flagged.filter(F.col("_media") & ~F.col("_robots_ok"))
-                    .filter(is_image)
-                    .select("seed_id", "url",
-                            F.lit("robots denied").alias("error"),
-                            F.lit("payload").alias("stage"),
-                            F.lit(it).alias("iter"))
-                )
-            else:
-                media_fetchable = media
-            # live image GETs honor the per-(seed,host) budget like page
-            # fetches (they are real requests); overflow defers to the
-            # next iteration via the frontier, NOT marked seen, so the
-            # deferred rows re-enter the media branch and fetch later.
-            # Only image rows compete for slots — non-image media are
-            # never fetched, so they'd waste budget and delay for nothing.
-            # The ranking is checkpointed once (the fetch, the seen
-            # marking and the requeue all read it) and counts the
-            # deferred rows for the frontier size.
-            img_rows = media_fetchable.filter(is_image)
-            if live_payloads and cfg.parallelism > 0:
-                ranked, counted = _ckpt_counts(
-                    politeness_flag(img_rows, cfg.parallelism, cfg.skew_salt),
-                    deferred=~F.col("_sel"))
-                img_rows = ranked.filter("_sel").drop("_sel")
-                media_overflow = ranked.filter(~F.col("_sel")).drop("_sel")
-                # payload-budget-deferred media re-enter unchanged (same
-                # depth — delay, not drop; they are NOT marked seen)
-                requeue.append((media_overflow, counted["deferred"]))
-                m["rows_seen"] -= counted["deferred"]
-            images_it = img_rows.select(
-                "seed_id", "url", F.lit(it).alias("iter"),
-                F.col("src_url"))
-            if image_payloads is not None and cfg.ingest_images:
-                # E7/S9 payload ingestion: discovered image URLs join
-                # their fetched payloads (input_hint-shaped table; the
-                # sandbox stand-in for the image GET), then decode+verify
-                # in the Arrow stage with per-partition lineage. Absent
-                # payloads surface as pixel_ok=false rows, never drops.
-                from xcrawl3r_spark.operators.images import decode_and_verify
-
-                images_it = decode_and_verify(
-                    images_it.drop("src_url").join(
-                        image_payloads, "url", "left"),
-                    carry=("seed_id", "url", "iter"),
-                )
-            elif live_payloads:
+            deferred = 0
+            if live_payloads:
                 # live-HTTP payload branch: GET each discovered image's
                 # real bytes (binary — never charset-decoded; size-capped
                 # per cfg.max_payload_bytes; Referer = discovering page)
-                # and decode+characterize (dims/phash/lineage). No
-                # reference payload exists to verify against, so the
-                # output schema is CHARACTERIZE_SCHEMA, not the verify
-                # schema. CHECKPOINTED: the GET is a side effect — a lazy
-                # tail would re-fire every request once per action over
-                # res.images.
+                # and decode+characterize (dims/phash/lineage). Robots
+                # applies to media once the engine really fetches them:
+                # denied image GETs are never issued (the errors view
+                # records them; they stay seen, scheduled-and-refused like
+                # the reference's media abort). Only image rows are
+                # fetched — non-image media never are.
                 from xcrawl3r_spark.operators.fetch import (
                     http_fetch_payloads,
                 )
@@ -424,53 +371,35 @@ class Crawler:
                     characterize_payloads,
                 )
 
-                images_it = _ckpt(characterize_payloads(
-                    http_fetch_payloads(images_it, cfg),
+                img_rows = flagged.filter(
+                    F.col("_media") & F.col("_robots_ok") & self._is_image
+                ).drop(*FLAGS)
+                if cfg.parallelism > 0:
+                    # image GETs honor the per-(seed,host) budget like page
+                    # fetches (they are real requests); the overflow defers
+                    # to the next iteration via the frontier, NOT marked
+                    # seen, so it re-enters the media branch and fetches
+                    # later. The ranking is checkpointed once (the fetch,
+                    # the seen view and the frontier view read it) and
+                    # counts the deferred rows for the frontier size.
+                    ranked, counted = _ckpt_counts(
+                        politeness_flag(img_rows, cfg.parallelism,
+                                        cfg.skew_salt),
+                        deferred=~F.col("_sel"))
+                    w["ranked"] = ranked
+                    img_rows = ranked.filter("_sel").drop("_sel")
+                    deferred = counted["deferred"]
+                    m["rows_seen"] -= deferred
+                # CHECKPOINTED: the GET is a side effect — a lazy tail
+                # would re-fire every request once per action over
+                # res.images. No reference payload exists to verify
+                # against, so the schema is CHARACTERIZE_SCHEMA.
+                w["images"] = _ckpt(characterize_payloads(
+                    http_fetch_payloads(
+                        img_rows.select("seed_id", "url", "iter", "src_url"),
+                        cfg),
                     carry=("seed_id", "url", "iter"),
                 ))
-                # failed GETs surface in errors like page fetches do,
-                # classified on the transport's explicit outcome marker
-                # (NOT on null-patterns: an over-cap truncated payload
-                # keeps a non-null content type, and a completed 200
-                # fetch of a non-image content type is NOT a fetch
-                # failure — it stays out of errors, decoded_ok=false in
-                # the images output is its record)
-                fetch_errs = (
-                    images_it.filter(F.col("payload_outcome") != "fetched")
-                    .select(
-                        "seed_id", "url",
-                        F.when(
-                            F.col("payload_outcome") == "truncated",
-                            F.concat(
-                                F.lit("payload too large (status "),
-                                F.col("payload_status"), F.lit(")")),
-                        ).otherwise(F.coalesce(
-                            F.concat(F.lit("status "),
-                                     F.col("payload_status")),
-                            F.lit("fetch failed"))).alias("error"),
-                        F.lit("payload").alias("stage"), "iter")
-                )
-                payload_errors_it = (
-                    fetch_errs if payload_errors_it is None
-                    else payload_errors_it.unionByName(fetch_errs)
-                )
-            else:
-                images_it = images_it.drop("src_url")
-            # (6) mark seen: every scheduled request, incl. media-aborted.
-            # Live-mode media deferred by the payload budget are NOT seen
-            # yet (their fetch is postponed, not refused).
-            seen_cond = F.col("_sel") | F.col("_media")
-            seen_it = (
-                flagged.filter(seen_cond)
-                .select("seed_id", "url", "url_hash", "dedup_key", "host", "depth")
-                .withColumn("iter", F.lit(it))
-            )
-            if media_overflow is not None:
-                # on dedup_key (unique per row): with per-seed dedup, one
-                # seed's copy of an image may fetch while another's defers
-                seen_it = seen_it.join(
-                    media_overflow.select("dedup_key"), "dedup_key", "left_anti"
-                ).select(*seen_it.columns)
             m["t_new"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
             # (7) fetch: either the real Arrow-batched HTTP stage
@@ -480,31 +409,20 @@ class Crawler:
             # host skew cannot concentrate — AQE picks the physical join).
             # Both produce identical schemas, so everything downstream —
             # error split, extraction, robots mining — is mode-agnostic.
+            selected = flagged.filter("_sel").drop(*FLAGS)
             if cfg.fetch_mode == "http":
                 from xcrawl3r_spark.operators.fetch import http_fetch
 
-                # CHECKPOINTED like the image payload stage: the GET is
-                # a side effect, and `fetched` feeds TWO consumers with
-                # independent lineage (errors_it below and the extracted
-                # checkpoint) — a lazy fetch re-fires every request once
-                # per consumer (store runs re-GET each page on the
-                # errors commit; storeless runs re-GET when the caller
-                # materializes res.errors). One materialization per
-                # iteration, every consumer reads the disk blocks.
+                # CHECKPOINTED like the image payload stage: the GET is a
+                # side effect, and the extraction and the robots mining
+                # each read `fetched` — a lazy fetch would re-fire every
+                # request once per consumer.
                 fetched = _ckpt(http_fetch(selected, cfg))
             else:
                 fetched = selected.join(
                     pages_k, selected.url == pages_k.page_url, "left"
                 ).drop("page_url")
-            errors_it = (
-                fetched.filter(F.col("body").isNull() | (F.col("status") != 200))
-                .select("seed_id", "url",
-                        F.coalesce(F.concat(F.lit("status "), F.col("status")),
-                                   F.lit("fetch failed")).alias("error"),
-                        F.lit("fetch").alias("stage"), F.lit(it).alias("iter"))
-            )
-            ok = fetched.filter(F.col("body").isNotNull() & (F.col("status") == 200))
-            ok = ok.withColumn("is_file", is_file)
+            ok = F.col("body").isNotNull() & (F.col("status") == 200)
             mined_inc: DataFrame | None = None
             if cfg.obey_robots and robots is None:
                 # rules table stays tiny (one row per host with a fetched
@@ -514,81 +432,73 @@ class Crawler:
                 # re-collapsed to one row per host — robots_filter joins on
                 # host and duplicate rows would fan out frontier rows.
                 mined_inc = parse_robots_rules(
-                    ok.filter(F.col("url").endswith("/robots.txt"))
+                    fetched.filter(ok & F.col("url").endswith("/robots.txt"))
                     .select("host", "body"))
                 robots_rules = _ckpt(
                     mined_inc if robots_rules is None
                     else collapse_robots_rules(
                         robots_rules.unionByName(mined_inc)))
-            # (8) extraction (Arrow-batched) + scope filter on emits/visits
-            # children within the depth limit (A4) enter the next frontier
-            in_depth = (F.col("depth") + 1 <= cfg.depth if cfg.depth > 0
-                        else F.lit(True))
+            # (8) extraction (Arrow-batched) + scope filter on emits/visits.
+            # Failed fetches pass through the same stage as kind='error'
+            # rows, so the fetch join runs once: a second, filtered branch
+            # over the join would read other pages columns and plan its
+            # own pages broadcast.
+            not_err = F.col("kind") != "error"
             extracted, counted = _ckpt_counts(
-                extract_links(ok).filter(in_scope),
-                rows_extracted=F.lit(True), children=in_depth)
+                extract_links(fetched.select(
+                    "seed_id", "url", "depth", "content_type",
+                    F.when(ok, F.col("body")).alias("body"),
+                    self._is_file.alias("is_file"),
+                    F.when(F.col("body").isNull() | (F.col("status") != 200),
+                           F.coalesce(F.concat(F.lit("status "),
+                                               F.col("status")),
+                                      F.lit("fetch failed"))).alias("error")))
+                .filter(self._in_scope | ~not_err)
+                .withColumn("iter", F.lit(it)),
+                rows_extracted=not_err, children=self._in_depth & not_err)
+            w["extracted"] = extracted
             m["rows_extracted"] = counted["rows_extracted"]
             m["t_fetch_extract"] = round(time.perf_counter() - t0, 3)
             t0 = time.perf_counter()
-            edges_it = (
-                extracted.filter(F.col("kind") != "minvisit")
-                .withColumn("iter", F.lit(it))
-            )
             # (9) next frontier: children at depth+1, depth-gated (A4),
-            # plus the requeued overflow
-            child = extracted.filter(in_depth).select(
-                "seed_id", F.col("url"), (F.col("depth") + 1).alias("depth"),
-                # the discovering page -> next fetch's Referer
-                # (extensions.Referer, xcrawl3r.go:307)
-                F.col("src_url"),
-            ).withColumn("disc_iter", F.lit(it))
-            pieces = [(self._with_keys(child), counted["children"])] + requeue
-            frontier = self._priority_buckets(
-                _union([df.select(*FRONTIER_COLS) for df, _ in pieces]))
-            m["rows_overflow"] = sum(n for _, n in requeue)
-            m["rows_frontier_next"] = sum(n for _, n in pieces)
+            # plus the requeued overflow (pages and deferred image GETs).
+            # Its row count decides whether the loop goes on.
+            frontier = self._priority_buckets(self._frontier(w))
+            m["rows_overflow"] += deferred
+            m["rows_frontier_next"] = counted["children"] + m["rows_overflow"]
             frontier_rows = m["rows_frontier_next"]
-            # The frontier is a cheap bounded-depth transform over this
-            # iteration's ALREADY-checkpointed extracted/flagged frames, so
-            # its own checkpoint buys no lineage truncation — only a
-            # per-iteration materialization job (fixed job overhead
-            # dominates small BFS waves). It stays lazy — the store commit
-            # writes it from those checkpoints — unless range-bucketing
-            # wants the layout (a lazy range exchange would re-sample in
-            # the commit and again in the next iteration). Reading the
-            # committed snapshot back instead would hand the planner the
-            # parquet files' tiny size estimates: the next fetch join then
-            # broadcasts the selected batch and streams the whole pages
-            # table (measured: more tasks, shuffle bytes and files).
+            # The frontier is a cheap bounded-depth view over this
+            # iteration's ALREADY-checkpointed frames, so its own
+            # checkpoint buys no lineage truncation — only a per-iteration
+            # materialization job (fixed job overhead dominates small BFS
+            # waves). It stays lazy unless range-bucketing wants the
+            # layout (a lazy range exchange would re-sample in every
+            # action over it). Reading the frontier back from the store
+            # instead would hand the planner the parquet files' tiny size
+            # estimates: the next fetch join then broadcasts the selected
+            # batch and streams the whole pages table (measured: more
+            # tasks, shuffle bytes and files).
             if self._range_buckets():
                 frontier = _ckpt(frontier)
 
-            # edges/images/errors parts stay LAZY: they are cheap filters
-            # over checkpointed parents, materialized once at the end (or
-            # by the store commit below).
+            # the outputs stay LAZY: cheap views over checkpointed frames,
+            # materialized once at the end (or by the caller)
+            seen_it, edges_it = self._seen(w), self._edges(w)
             seen = seen_it if seen is None else seen.unionByName(seen_it)
             seen_parts += 1
             if seen_parts >= SEEN_COLLAPSE_EVERY:
                 seen = _ckpt(seen)
                 seen_parts = 1
             edges_parts.append(edges_it)
-            images_parts.append(images_it)
-            if payload_errors_it is not None:
-                errors_it = errors_it.unionByName(payload_errors_it)
-            errors_parts.append(errors_it)
+            images_parts.append(self._images(w, image_payloads))
+            errors_parts.append(self._errors(w))
             m["t_frontier"] = round(time.perf_counter() - t0, 3)
 
             if self.store is not None:
                 t0 = time.perf_counter()
-                parts = {"seen": seen_it, "edges": edges_it,
-                         "images": images_it, "errors": errors_it}
                 if mined_inc is not None:
-                    parts["robots_rules"] = mined_inc
-                # frontier last: resume() keys off its commit, so the rules
-                # and rows of any resumable iteration are durable first
-                # (a crash in between leaves orphan commits upto= drops)
-                parts["frontier"] = frontier
-                self.store.commit_wave(parts, it)
+                    w["robots_rules"] = mined_inc
+                self.store.commit_wave(w, it)
                 m["t_store"] = round(time.perf_counter() - t0, 3)
             if on_iteration is not None:
                 # as-discovered streaming hook (the reference's consumer
@@ -616,25 +526,125 @@ class Crawler:
             metrics=metrics,
         )
 
+    # -- the outputs: one view each over a wave's frames ------------------
+    # ``w`` maps WAVE_TABLES to one wave's frames (the loop) or to the
+    # union of the committed waves' (resume(), StreamingCrawler); every
+    # frame carries the ``iter`` that made it, so a view reads the same
+    # over one wave and over history.
+    def _seen(self, w: dict) -> DataFrame:
+        """Every scheduled request, incl. media-aborted — except live image
+        GETs the payload budget deferred (postponed, not refused)."""
+        seen = w["flagged"].filter(F.col("_sel") | F.col("_media")).select(
+            *_cols("seen"))
+        if w.get("ranked") is not None:
+            # keyed on (iter, dedup_key): a URL deferred in wave k is seen
+            # in the wave that fetches it; dedup_key is unique per row, so
+            # with per-seed dedup one seed's copy may fetch while another
+            # seed's copy of the same URL defers
+            deferred = w["ranked"].filter(~F.col("_sel"))
+            seen = seen.join(deferred.select("iter", "dedup_key"),
+                             ["iter", "dedup_key"], "left_anti")
+        return seen.select(*_cols("seen"))
+
+    def _edges(self, w: dict) -> DataFrame:
+        """Emit-per-occurrence links (D3): no .min. visits, no errors."""
+        return w["extracted"].filter(
+            ~F.col("kind").isin("minvisit", "error")).select(*_cols("edges"))
+
+    def _images(self, w: dict, image_payloads: DataFrame | None) -> DataFrame:
+        """Discovered image URLs: the live GETs' stored characterization,
+        or a filter over ``flagged``, decoded and verified against
+        ``image_payloads`` when given (E7/S9: the input_hint-shaped table
+        is the sandbox stand-in for the image GET; absent payloads surface
+        as pixel_ok=false rows, never drops)."""
+        if w.get("images") is not None:
+            return w["images"]
+        images = w["flagged"].filter(F.col("_media") & self._is_image).select(
+            "seed_id", "url", "iter")
+        if image_payloads is not None and self.cfg.ingest_images:
+            from xcrawl3r_spark.operators.images import decode_and_verify
+
+            images = decode_and_verify(
+                images.join(image_payloads, "url", "left"),
+                carry=("seed_id", "url", "iter"))
+        return images
+
+    def _errors(self, w: dict) -> DataFrame:
+        """Failed page fetches, plus for live image GETs the robots-denied
+        ones (never issued) and the failed ones — classified on the
+        transport's explicit outcome marker, NOT on null-patterns: an
+        over-cap truncated payload keeps a non-null content type, and a
+        completed 200 fetch of a non-image content type is NOT a fetch
+        failure (decoded_ok=false in the images output is its record)."""
+        parts = [w["extracted"].filter(F.col("kind") == "error").select(
+            "seed_id", "url", "error", F.lit("fetch").alias("stage"), "iter")]
+        images = w.get("images")
+        if images is not None:
+            payload = F.lit("payload").alias("stage")
+            if self.cfg.obey_robots:
+                parts.append(w["flagged"].filter(
+                    F.col("_media") & ~F.col("_robots_ok") & self._is_image
+                ).select("seed_id", "url",
+                         F.lit("robots denied").alias("error"), payload,
+                         "iter"))
+            status = F.col("payload_status")
+            parts.append(images.filter(
+                F.col("payload_outcome") != "fetched").select(
+                "seed_id", "url",
+                F.when(F.col("payload_outcome") == "truncated", F.concat(
+                    F.lit("payload too large (status "), status, F.lit(")"))
+                ).otherwise(F.coalesce(F.concat(F.lit("status "), status),
+                                       F.lit("fetch failed"))).alias("error"),
+                payload, "iter"))
+        return _union(parts)
+
+    def _frontier(self, w: dict) -> DataFrame:
+        """The next frontier: children at depth+1 within the depth limit,
+        plus the page overflow and the deferred image GETs (same depth —
+        delayed, not dropped)."""
+        child = w["extracted"].filter(
+            self._in_depth & (F.col("kind") != "error")).select(
+            "seed_id", "url", (F.col("depth") + 1).alias("depth"),
+            # the discovering page -> next fetch's Referer
+            # (extensions.Referer, xcrawl3r.go:307)
+            "src_url", F.col("iter").alias("disc_iter"))
+        pieces = [self._with_keys(child),
+                  w["flagged"].filter(F.col("_elig") & ~F.col("_sel"))]
+        if w.get("ranked") is not None:
+            pieces.append(w["ranked"].filter(~F.col("_sel")))
+        return _union([p.select(*FRONTIER_COLS) for p in pieces])
+
+    def committed(
+        self, image_payloads: DataFrame | None = None,
+    ) -> CrawlResult | None:
+        """The store's committed waves as a result (``iterations`` = the
+        last committed wave), or None before the first commit."""
+        last = self.store.last_iteration()
+        if last is None:
+            return None
+        w = {t: self.store.read(t) for t in WAVE_TABLES}
+        return CrawlResult(
+            edges=self._edges(w), seen=self._seen(w),
+            images=self._images(w, image_payloads), errors=self._errors(w),
+            iterations=last)
+
     def resume(
         self, seeds: DataFrame, pages: DataFrame,
         robots: DataFrame | None = None,
         image_payloads: DataFrame | None = None,
         on_iteration: "Callable[[int, DataFrame], None] | None" = None,
     ) -> CrawlResult:
-        """Continue a checkpointed crawl from its last committed iteration.
+        """Continue a checkpointed crawl from its last committed wave.
 
         Re-runs nothing that committed; the deterministic data plane makes
         the combined output bit-identical to an uninterrupted run."""
         if self.store is None:
             raise ValueError("resume() requires cfg.checkpoint_dir")
-        last = self.store.last_iteration("frontier")
-        if last is None:
+        done = self.committed(image_payloads)
+        if done is None:
             return self.crawl(seeds, pages, robots, image_payloads,
                               on_iteration=on_iteration)
-        frontier = self.store.read_iteration(
-            "frontier", last, schema=FRONTIER_SCHEMA)
-        seen = self.store.read("seen", upto=last)
+        last = done.iterations
         # Restore robots rules mined by completed iterations: without this
         # an obey_robots run with mined (not supplied) rules would resume
         # unenforced and diverge from an uninterrupted run. Increments are
@@ -642,26 +652,19 @@ class Crawler:
         # in-loop state (arrays are sorted/deduped -> order-insensitive).
         rules = None
         if self.cfg.obey_robots and robots is None:
-            committed = self.store.read("robots_rules", upto=last)
-            if committed is not None:
+            mined = self.store.read("robots_rules")
+            if mined is not None:
                 rules = collapse_robots_rules(
-                    committed.select("host", "allow", "deny"))
+                    mined.select("host", "allow", "deny"))
         res = self.crawl(
             seeds, pages, robots, image_payloads,
             start_iteration=last + 1,
-            initial_frontier=frontier,
-            initial_seen=seen,
+            initial_frontier=self._frontier(
+                {t: self.store.read(t, last) for t in WAVE_TABLES}),
+            initial_seen=done.seen,
             initial_robots_rules=rules,
             on_iteration=on_iteration,
         )
-        # stitch committed history with the new tail
-        edges = self.store.read("edges")
-        images = self.store.read("images")
-        errors = self.store.read("errors")
-        return replace(
-            res,
-            edges=edges if edges is not None else res.edges,
-            images=images if images is not None else res.images,
-            errors=errors if errors is not None else res.errors,
-            iterations=res.iterations + last,
-        )
+        # committed history and the new tail, as one set of views
+        return replace(self.committed(image_payloads),
+                       iterations=res.iterations + last, metrics=res.metrics)

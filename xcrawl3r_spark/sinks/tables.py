@@ -1,32 +1,28 @@
-"""Snapshot table store — Iceberg-style atomic commits + time travel on
-plain Parquet, used for checkpointed frontier/seen/edges state.
+"""Snapshot store — all-or-nothing wave commits + time travel on plain
+Parquet, used for a checkpointed crawl's wave frames.
 
-Each crawl iteration is one commit on a directory of parquet files with a
-JSON manifest:
+Each crawl wave is one commit of several tables under one manifest:
 
-    <base>/<table>/data/iter=<k>/ part-*.parquet      (one commit per iter)
-    <base>/<table>/_manifest.json                      (atomic rename)
+    <base>/<table>/iter=<k>/ part-*.parquet    (one directory per table per wave)
+    <base>/waves/_manifest.json                 (atomic rename)
 
-A manifest names each commit's data directory relative to its table
-directory, so a moved or copied checkpoint directory reads its own files.
-Manifests written with absolute paths still read (``os.path.join`` keeps
-an absolute entry as it is).
+The manifest lists the committed waves, ``{"iter": k, "tables": {table:
+path}}``, each path relative to ``<base>``, so a moved or copied
+checkpoint directory reads its own files (an absolute entry still reads:
+``os.path.join`` keeps it as it is).
 
-Commit protocol: write data dir -> write manifest.tmp -> os.replace()
-(atomic on POSIX). A killed run leaves either the old manifest (commit
-invisible -> iteration re-runs deterministically) or the new one (commit
-visible -> iteration skipped on resume). ``commit_wave`` writes one
-iteration of several tables concurrently and publishes the resume-key
-table's manifest last. Combined with a fully
-deterministic data plane (no wall clock, no RNG — SURVEY §4.2) resume is
-bit-identical.
+Commit protocol: write every table of the wave concurrently -> write
+manifest.tmp -> os.replace() (atomic on POSIX). A failed write or a
+killed run leaves the old manifest: nothing of the wave is visible, the
+wave re-runs deterministically and overwrites its torn directories.
+Combined with a fully deterministic data plane (no wall clock, no RNG —
+SURVEY §4.2) resume is bit-identical.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,101 +35,70 @@ class SnapshotStore:
         self.base = base_dir
         os.makedirs(base_dir, exist_ok=True)
 
-    def _tdir(self, table: str) -> str:
-        return os.path.join(self.base, table)
+    def _manifest_path(self) -> str:
+        return os.path.join(self.base, "waves", "_manifest.json")
 
-    def _data_path(self, table: str, commit: dict) -> str:
-        return os.path.join(self._tdir(table), commit["path"])
+    def waves(self) -> list[dict]:
+        """The committed waves' manifest entries. A directory in the old
+        per-table layout (a ``_manifest.json`` per table, no wave
+        manifest) raises ``ValueError``: it has no reader."""
+        path = self._manifest_path()
+        if os.path.exists(path):
+            with open(path) as f:
+                return json.load(f)["commits"]
+        old = sorted(t for t in os.listdir(self.base) if os.path.exists(
+            os.path.join(self.base, t, "_manifest.json")))
+        if old:
+            raise ValueError(
+                f"{self.base} is a checkpoint in the old per-table layout "
+                f"(a _manifest.json per table: {', '.join(old)}; no "
+                "waves/_manifest.json); it cannot be resumed — start a "
+                "new checkpoint_dir")
+        return []
 
-    def _manifest_path(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_manifest.json")
+    def last_iteration(self) -> int | None:
+        return max((w["iter"] for w in self.waves()), default=None)
 
-    def manifest(self, table: str) -> dict:
-        path = self._manifest_path(table)
-        if not os.path.exists(path):
-            return {"commits": []}
-        with open(path) as f:
-            return json.load(f)
+    def _write(self, df: DataFrame, table: str, iteration: int) -> str:
+        path = os.path.join(table, f"iter={iteration}")
+        # overwrite: a torn directory of a failed or killed commit
+        df.write.mode("overwrite").parquet(os.path.join(self.base, path))
+        return path
 
-    def last_iteration(self, table: str) -> int | None:
-        commits = self.manifest(table)["commits"]
-        return max((c["iter"] for c in commits), default=None)
-
-    def _committed(self, table: str, iteration: int) -> bool:
-        return any(c["iter"] == iteration
-                   for c in self.manifest(table)["commits"])
-
-    def _write_data(self, df: DataFrame, table: str, iteration: int) -> str:
-        data_dir = os.path.join(self._tdir(table), "data", f"iter={iteration}")
-        if os.path.exists(data_dir):
-            shutil.rmtree(data_dir)  # torn write from a killed run
-        df.write.mode("overwrite").parquet(data_dir)
-        return data_dir
-
-    def _publish(self, table: str, iteration: int, data_dir: str) -> None:
-        m = self.manifest(table)
-        path = os.path.relpath(data_dir, self._tdir(table))
-        m["commits"].append({"iter": iteration, "path": path, "meta": {}})
-        tmp = self._manifest_path(table) + ".tmp"
-        os.makedirs(self._tdir(table), exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(table))
-
-    def commit_wave(self, parts: dict[str, DataFrame], iteration: int) -> None:
-        """Atomically append one iteration's rows of several tables as new
-        snapshots: every data directory is written concurrently (one Spark
-        job each, sharing the cluster), then the manifests are published
-        in ``parts`` order. A table that already has a commit for the
-        iteration is skipped (resume re-ran the iteration).
-
-        The LAST part is the resume key (the crawl's frontier): it is
-        published only when every part was written, so the parts before
-        it are durable before ``resume()`` can key off it. A failed write
-        still publishes the other finished parts, then re-raises.
-        """
-        todo = {t: df for t, df in parts.items()
-                if not self._committed(t, iteration)}
-        if not todo:
+    def commit_wave(self, tables: dict[str, DataFrame], iteration: int) -> None:
+        """Commit one wave's tables: every data directory is written
+        concurrently (one Spark job each, sharing the cluster), then one
+        manifest entry names them all. If any write fails nothing of the
+        wave is published and the first error is re-raised. A wave that
+        is already committed is skipped (resume re-ran it)."""
+        waves = self.waves()
+        if any(w["iter"] == iteration for w in waves):
             return
         # the writers inherit the calling thread's job group and tags (the
         # per-wave trace groups). Without pinned threads
         # (PYSPARK_PIN_THREAD=false) the helper returns the session
         # itself: there is no thread-local state to carry over.
         inherit = inheritable_thread_target(self.spark)
-        write = inherit(self._write_data) if callable(inherit) else self._write_data
-        with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+        write = inherit(self._write) if callable(inherit) else self._write
+        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
             futures = {t: pool.submit(write, df, t, iteration)
-                       for t, df in todo.items()}
-        errors = [f.exception() for f in futures.values() if f.exception()]
-        key = list(parts)[-1]
-        for t, f in futures.items():
-            if f.exception() is None and (t != key or not errors):
-                self._publish(t, iteration, f.result())
-        if errors:
-            raise errors[0]
+                       for t, df in tables.items()}
+        for f in futures.values():
+            if f.exception() is not None:
+                raise f.exception()
+        waves.append({"iter": iteration,
+                      "tables": {t: f.result() for t, f in futures.items()}})
+        path = self._manifest_path()
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump({"commits": waves}, f, indent=1, sort_keys=True)
+        os.replace(path + ".tmp", path)
 
-    def read(self, table: str, upto: int | None = None) -> DataFrame | None:
-        """Read the union of committed snapshots (optionally time-traveled
-        to iteration <= upto). None if no commits."""
-        commits = self.manifest(table)["commits"]
-        if upto is not None:
-            commits = [c for c in commits if c["iter"] <= upto]
-        if not commits:
-            return None
-        paths = [self._data_path(table, c)
-                 for c in sorted(commits, key=lambda c: c["iter"])]
-        return self.spark.read.parquet(*paths)
-
-    def read_iteration(self, table: str, iteration: int,
-                       schema: str | None = None) -> DataFrame | None:
-        """One iteration's snapshot. A known ``schema`` skips the parquet
-        footer read (schema inference costs a Spark job)."""
-        commits = [c for c in self.manifest(table)["commits"] if c["iter"] == iteration]
-        if not commits:
-            return None
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(self._data_path(table, commits[0]))
-
+    def read(self, table: str, iteration: int | None = None) -> DataFrame | None:
+        """The union of a table's committed snapshots, or one wave's
+        (``iteration``). None if no committed wave holds the table."""
+        paths = [os.path.join(self.base, w["tables"][table])
+                 for w in sorted(self.waves(), key=lambda w: w["iter"])
+                 if table in w["tables"]
+                 and iteration in (None, w["iter"])]
+        return self.spark.read.parquet(*paths) if paths else None

@@ -4,9 +4,10 @@ The reference's "stream" is a pull-based work queue (channels) with no
 event time or watermarks — the engine proper is batch-iterative. This
 wrapper maps that queue shape onto Structured Streaming: a seed stream
 (files or rate source) drives ``foreachBatch``; each micro-batch of seeds
-runs a full bounded crawl with the persistent ``seen`` table as the state
-store (via SnapshotStore), so a long-running process continuously absorbs
-new seeds while never re-fetching known URLs.
+runs a full bounded crawl against the committed waves' seen view (the
+same view ``Crawler.resume()`` reads, over the SnapshotStore), so a
+long-running process continuously absorbs new seeds while never
+re-fetching known URLs.
 
 Not required for reference parity (SURVEY §2.8); exercised by
 tests/test_streaming.py on a file-source seed drip.
@@ -27,7 +28,9 @@ class StreamingCrawler:
     seeds arrive as text lines (one URL per line, like the reference's
     stdin/--list sources, cmd/xcrawl3r/main.go:196-233); each micro-batch
     is crawled to ``cfg.depth`` with global dedup against all previously
-    seen URLs (checkpointed via cfg.checkpoint_dir).
+    seen URLs, read as ``Crawler.committed().seen`` from the waves
+    committed under cfg.checkpoint_dir; a batch's waves number on from
+    the last committed one.
     """
 
     def __init__(self, spark: SparkSession, cfg: CrawlConfig, pages: DataFrame):
@@ -53,16 +56,14 @@ class StreamingCrawler:
         )
         if seeds.isEmpty():
             return
-        store = self.crawler.store
-        seen = store.read("seen")
+        done = self.crawler.committed()
         frontier = self.crawler.seed_frontier(seeds).filter(
             F.col("url").rlike(self.cfg.scope_pattern()))
-        base_iter = (store.last_iteration("seen") or 0) + 1
         self.crawler.crawl(
             seeds, self.pages,
-            start_iteration=base_iter,
+            start_iteration=(done.iterations if done else 0) + 1,
             initial_frontier=frontier,
-            initial_seen=seen,
+            initial_seen=done.seen if done else None,
         )
 
     def start(self, seed_dir: str, trigger_once: bool = True):
