@@ -117,7 +117,7 @@ def _union(parts: list[DataFrame]) -> DataFrame:
 
 @dataclass
 class CrawlResult:
-    # every field is a view over the waves' frames (see Crawler._seen)
+    # the four frames are views over the waves' frames (Crawler._seen ..)
     edges: DataFrame    # seed_id, src_url, url, kind, depth, iter
     seen: DataFrame     # seed_id, url, url_hash, dedup_key, host, depth, iter
     images: DataFrame   # seed_id, url, iter (+ decode/characterize columns)
