@@ -534,8 +534,7 @@ class Crawler:
     def _seen(self, w: dict) -> DataFrame:
         """Every scheduled request, incl. media-aborted — except live image
         GETs the payload budget deferred (postponed, not refused)."""
-        seen = w["flagged"].filter(F.col("_sel") | F.col("_media")).select(
-            *_cols("seen"))
+        seen = w["flagged"].filter(F.col("_sel") | F.col("_media"))
         if w.get("ranked") is not None:
             # keyed on (iter, dedup_key): a URL deferred in wave k is seen
             # in the wave that fetches it; dedup_key is unique per row, so
